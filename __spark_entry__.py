@@ -1249,7 +1249,7 @@ def q36(spark, sf_dir):
     # Closed-form oracle for the 1s-interpolated AVG rollup: collapse points
     # to 1s knots (mean on collisions), each inter-knot segment carries a
     # constant slope, so a window's mean is exact segment-overlap arithmetic
-    # — the same derivation as rollup_native_avg, written in SQL. Windows
+    # — the same derivation as rollup_native's AVG, written in SQL. Windows
     # emit iff the covered-second count equals the window width.
     """
     WITH pts AS (

@@ -115,9 +115,9 @@ def flagship_rollup(
     reg.cache().count()
 
     def once() -> int:
-        # run_tier persists `prepared` (3 rollup branches consume it); the
-        # shaped points have ONE consumer here, so they stream straight into
-        # the compressor — no intermediate persist, no extra action
+        # one rollup pass consumes `prepared`, and the shaped points have ONE
+        # consumer here, so they stream straight into the compressor — no
+        # persist, no extra action
         pts, _ = pipeline.run_tier(pages, reg, "1h")
         obs = Observation()
         pts = pts.observe(obs, F.count(F.lit(1)).alias("n"))

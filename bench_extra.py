@@ -142,16 +142,10 @@ def mode_flagship():
 
     staged("extract_noop", extract_only)
 
-    # prepare + persist + rollup branches (shaped), no compress
+    # prepare + rollup pass (shaped), no compress
     def rollup_only():
-        prepared = pipeline.prepare(pages, reg, tier).persist()
-        try:
-            pts = pipeline.shape_points(
-                pipeline.rollup_points(prepared, tier), reg, tier
-            )
-            _noop(pts)
-        finally:
-            prepared.unpersist()
+        prepared = pipeline.prepare(pages, reg, tier)
+        _noop(pipeline.shape_points(pipeline.rollup_points(prepared, tier), reg, tier))
 
     staged("rollup_shaped_noop", rollup_only)
 
@@ -185,7 +179,7 @@ def mode_explain(out_dir):
     from bench import _gen_pages
 
     pages, reg = _gen_pages(spark, "/tmp/bx_pages_e", max(200, int(2000 * sf * 10)), 300)
-    pts, _ = pipeline.run_tier(pages, reg, "1h", persist=False)
+    pts, _ = pipeline.run_tier(pages, reg, "1h")
     blobs = compress_points(pts.select("url", "start", "value"), "1h")
     plan = blobs._sc._jvm.PythonSQLUtils.explainString(
         blobs._jdf.queryExecution(), "formatted"

@@ -233,7 +233,7 @@ def test_postprocessor_plugin_registry(spark, pages, reg):
     from timeseries_harmonizer_spark.operators import postprocess as PP
     from timeseries_harmonizer_spark.plans import pipeline
 
-    pts, _ = pipeline.run_tier(pages, reg, "1h", persist=False)
+    pts, _ = pipeline.run_tier(pages, reg, "1h")
 
     class NightZeroToy(PP.PostProcessor):
         name = "night_zero_toy"

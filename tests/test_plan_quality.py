@@ -42,12 +42,10 @@ def test_rollup_native_stays_codegen(spark, pages, reg):
     """The closed-form rollup path must contain no Python (BatchEvalPython /
     ArrowEvalPython / FlatMapGroupsInPandas) nodes."""
     from timeseries_harmonizer_spark.config import TIERS
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native_sum
-    from timeseries_harmonizer_spark.operators.sessionize import sessionize
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native
+    from timeseries_harmonizer_spark.plans.pipeline import prepare
 
-    df = pages.where(F.col("value").isNotNull())
-    df = sessionize(df, gap_seconds=7200)
-    q = rollup_native_sum(df, freq_seconds=3600)
+    q = rollup_native(prepare(pages, reg, TIERS["1h"]), freq_seconds=3600)
     plan = _plan(q)
     for bad in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
         assert bad not in plan, f"{bad} found in native rollup plan"
@@ -267,16 +265,27 @@ def test_hot_series_task_input_bounded(spark):
     assert hot_max * 10 <= hot_total, (hot_max, hot_total)
 
 
+def _fact_exchanges(plan: str) -> list[tuple[str, str]]:
+    """(key, origin) of every hash exchange whose input carries warc_ts —
+    of an executed adaptive plan, only the exchanges of its final plan."""
+    tree_ids = set(re.findall(r"Exchange \((\d+)\)", plan.split("== Initial Plan ==")[0]))
+    blocks = re.findall(
+        r"\((\d+)\) Exchange\nInput[^\n]*warc_ts[^\n]*\n"
+        r"Arguments: hashpartitioning\((\w+)[^\n]*?\), (\w+)",
+        plan,
+    )
+    return [(key, origin) for i, key, origin in blocks if i in tree_ids]
+
+
 def test_chunked_last_adds_no_fact_exchange(spark, pages, reg, tmp_path):
-    """The chunked LAST dense grid must reuse prepare's url partitioning
-    end to end: every fact exchange in the plan is prepare's own explicit
-    url repartition (REPARTITION_BY_NUM; replicated per consumer lineage
-    here because this test skips the persist the real pipeline does) — the
-    planner never inserts an ADDITIONAL series-data shuffle for the chunk
-    summaries, carry-in window, or grid join (those are broadcast- or
-    co-partition-satisfied)."""
+    """The chunked rollup (LAST claims and SUM/AVG segments, two-level
+    explode) must reuse prepare's url partitioning end to end: the only
+    fact exchange in the plan is prepare's own explicit url repartition
+    (REPARTITION_BY_NUM) — the planner never inserts an ADDITIONAL
+    series-data shuffle for the negative-diff or knots windows or the merge
+    aggregate (all co-partition-satisfied)."""
     from timeseries_harmonizer_spark.config import TIERS
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native_last
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native
     from timeseries_harmonizer_spark.plans.pipeline import prepare
 
     from timeseries_harmonizer_spark.sources.webpages import registry
@@ -285,20 +294,35 @@ def test_chunked_last_adds_no_fact_exchange(spark, pages, reg, tmp_path):
     pages.write.parquet(path)
     stored = spark.read.parquet(path)
     prepared = prepare(stored, registry(spark, stored), TIERS["1h"])
-    q = rollup_native_last(
+    q = rollup_native(
         prepared, freq_seconds=3600, session_col="session_id", chunk_windows=5
     )
     plan = _plan(q)
-    fact_blocks = re.findall(
-        r"\(\d+\) Exchange\nInput[^\n]*warc_ts[^\n]*\n"
-        r"Arguments: hashpartitioning\((\w+)[^\n]*?\), (\w+)",
-        plan,
-    )
-    assert fact_blocks, plan  # the regex must actually see the exchanges
-    for key, origin in fact_blocks:
-        assert key == "url" and origin == "REPARTITION_BY_NUM", (
-            f"unexpected fact exchange ({key}, {origin}):\n{plan}"
-        )
+    assert _fact_exchanges(plan) == [("url", "REPARTITION_BY_NUM")], plan
+
+
+def test_run_tier_points_one_pass(spark, pages, tmp_path):
+    """run_tier's points plan, after execution: one rollup pass over an
+    uncached ``prepared`` — no InMemoryRelation/InMemoryTableScan, no
+    Union, no Python node, and prepare's url repartition as the only fact
+    exchange."""
+    from timeseries_harmonizer_spark.plans.pipeline import run_tier
+    from timeseries_harmonizer_spark.sources.webpages import registry
+
+    path = str(tmp_path / "pages_pq5")
+    pages.write.parquet(path)
+    stored = spark.read.parquet(path)
+    pts = run_tier(stored, registry(spark, stored), "1h")[0]
+    assert pts.collect()  # executes this plan, so AQE's final plan shows
+    plan = _plan(pts)
+    assert "isFinalPlan=true" in plan, plan
+    for bad in (
+        "InMemoryRelation", "InMemoryTableScan", "Union",
+        "BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
+        "MapInPandas",
+    ):
+        assert bad not in plan, f"{bad} found in run_tier points plan:\n{plan}"
+    assert _fact_exchanges(plan) == [("url", "REPARTITION_BY_NUM")], plan
 
 
 def test_chunked_sum_preagg_adds_no_fact_exchange(spark, pages, reg, tmp_path):
@@ -325,11 +349,7 @@ def test_chunked_sum_preagg_adds_no_fact_exchange(spark, pages, reg, tmp_path):
         session_col="session_id", chunk_windows=5,
     )
     plan = _plan(q)
-    fact_blocks = re.findall(
-        r"\(\d+\) Exchange\nInput[^\n]*warc_ts[^\n]*\n"
-        r"Arguments: hashpartitioning\((\w+)[^\n]*?\), (\w+)",
-        plan,
-    )
+    fact_blocks = _fact_exchanges(plan)
     assert fact_blocks, plan
     for key, origin in fact_blocks:
         assert key == "url" and origin == "REPARTITION_BY_NUM", (

@@ -46,7 +46,7 @@ def test_hot_series_chunked(spark):
     still matches the closed-form native path post-round."""
     import pandas as pd
     import numpy as np
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native_avg
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native
 
     n = 50_000
     rng = np.random.default_rng(11)
@@ -62,7 +62,9 @@ def test_hot_series_chunked(spark):
         .reset_index(drop=True)
     )
     native = (
-        rollup_native_avg(df, freq_seconds=3600, session_col=None)
+        rollup_native(
+            df.withColumn("agg_func", F.lit("AVG")), freq_seconds=3600, session_col=None
+        )
         .toPandas()
         .sort_values("start")
         .reset_index(drop=True)
@@ -74,17 +76,17 @@ def test_hot_series_chunked(spark):
 
 
 def test_last_chunked_equals_unchunked(spark, pages, reg):
-    """The chunked LAST dense grid (bounded explode batches + per-chunk LOCF
-    with precomputed carry-in) must be row- and value-identical to the
-    direct whole-span grid."""
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native_last
+    """The chunked two-level explode (bounded batches of LAST claims and
+    SUM/AVG segments) must be row- and value-identical to one chunk over
+    the whole span."""
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native
 
     tier = TIERS["1h"]
-    prepared = pipeline.prepare(pages, reg, tier).where(F.col("agg_func") == "LAST")
+    prepared = pipeline.prepare(pages, reg, tier)
 
     def run(cw):
         return (
-            rollup_native_last(
+            rollup_native(
                 prepared, freq_seconds=tier.seconds, session_col="session_id",
                 chunk_windows=cw,
             )
@@ -93,8 +95,8 @@ def test_last_chunked_equals_unchunked(spark, pages, reg):
             .reset_index(drop=True)
         )
 
-    base = run(10**9)  # one chunk spans everything == the old direct grid
-    chunked = run(3)   # aggressively small chunks to stress carry-in
+    base = run(10**9)  # one chunk spans everything
+    chunked = run(1)   # one window per chunk: every boundary is a chunk edge
     assert len(base) == len(chunked), (len(base), len(chunked))
     assert (base["url"].to_numpy() == chunked["url"].to_numpy()).all()
     assert (base["start"].to_numpy() == chunked["start"].to_numpy()).all()
@@ -109,23 +111,24 @@ def test_last_chunked_equals_unchunked(spark, pages, reg):
 
 def test_last_sparse_long_span_bounded(spark):
     """The gap_check=None hazard: one url at a fine tier (1m) with a 40-day
-    hole between two observations. The grid must densify the whole span in
-    bounded chunks (40 days of minutes crosses the 50k default boundary),
+    hole between two observations. The first window's claim must explode
+    the whole span in bounded chunks (40 days of minutes crosses 50k),
     LOCF the hole from the first value, and keep is_real only where raw
     observations exist."""
     import pandas as pd
 
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native_last
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native
 
     t0 = pd.Timestamp("2024-01-01 00:00:00")
     t1 = t0 + pd.Timedelta(days=40)
     df = spark.createDataFrame(
         pd.DataFrame(
-            {"url": ["u", "u"], "warc_ts": [t0, t1], "value": [1.0, 2.0]}
+            {"url": ["u", "u"], "warc_ts": [t0, t1], "value": [1.0, 2.0],
+             "agg_func": ["LAST", "LAST"]}
         )
     )
     out = (
-        rollup_native_last(df, freq_seconds=60, session_col=None)
+        rollup_native(df, freq_seconds=60, session_col=None, chunk_windows=50_000)
         .toPandas()
         .sort_values("start")
         .reset_index(drop=True)

@@ -126,40 +126,47 @@ def test_twa_matches_numpy_trapezoid(spark):
     np.testing.assert_allclose(r["value"].to_numpy(), [1800.0, 5400.0])
 
 
-def test_sum_avg_combined_equals_separate(spark, pages, reg):
-    """r6: the single-pass SUM+AVG rollup must equal the separate
-    operators bit-for-bit on the same prepared frame (per-branch rows and
-    float operation order are identical by construction)."""
-    from timeseries_harmonizer_spark.operators.rollup import (
-        rollup_native_avg,
-        rollup_native_sum,
-        rollup_native_sum_avg,
-    )
+def test_same_second_rows_match_oracle(spark):
+    """Two raw rows inside one second (sub-second warc_ts): the knots
+    average them, which is what SUM and AVG replay, but LAST must take the
+    later row of that second, as the oracle's tumbling last() does."""
+    from timeseries_harmonizer_spark.functions import series_kernels as K
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native
 
-    tier = TIERS["1h"]
-    prepared = pipeline.prepare(pages, reg, tier)
-    combined = (
-        rollup_native_sum_avg(
-            prepared.where(F.col("agg_func").isin("SUM", "AVG")),
-            freq_seconds=tier.seconds, session_col="session_id",
+    t0 = pd.Timestamp("2024-01-01 00:00:00")
+    offsets = {
+        # the collision is the last observed second of window 0; window
+        # 60 is empty and carries it forward
+        "LAST": ([0.0, 30.0, 59.2, 59.7, 150.0], [1.0, 2.0, 3.0, 7.0, 4.0]),
+        "SUM": ([0.0, 40.0, 65.2, 65.7, 130.0], [0.0, 4.0, 10.0, 12.0, 20.0]),
+        "AVG": ([0.0, 40.0, 65.1, 65.8, 130.0], [5.0, 1.0, 8.0, 2.0, 6.0]),
+    }
+    rows, expected = [], []
+    for agg, (secs, vals) in offsets.items():
+        ts = t0 + pd.to_timedelta(secs, unit="s")
+        rows += [(agg, t, v, agg) for t, v in zip(ts, vals)]
+        exp = K.harmonize(pd.Series(vals, index=pd.DatetimeIndex(ts)), agg, 60)
+        expected.append(
+            pd.DataFrame({"url": agg, "start": exp.index, "value": exp.to_numpy()})
         )
-        .toPandas().sort_values(["url", "start"]).reset_index(drop=True)
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["url", "warc_ts", "value", "agg_func"])
     )
-    sums = rollup_native_sum(
-        prepared.where(F.col("agg_func") == "SUM"),
-        freq_seconds=tier.seconds, session_col="session_id",
-    )
-    avgs = rollup_native_avg(
-        prepared.where(F.col("agg_func") == "AVG"),
-        freq_seconds=tier.seconds, session_col="session_id",
-    )
-    separate = (
-        sums.unionByName(avgs)
-        .toPandas().sort_values(["url", "start"]).reset_index(drop=True)
-    )
-    assert len(combined) == len(separate)
-    assert (combined["url"].to_numpy() == separate["url"].to_numpy()).all()
-    assert (combined["start"].to_numpy() == separate["start"].to_numpy()).all()
-    np.testing.assert_array_equal(
-        combined["value"].to_numpy(), separate["value"].to_numpy()
-    )
+    got = rollup_native(df, freq_seconds=60, session_col=None).toPandas()
+    expected = pd.concat(expected, ignore_index=True)
+    _compare(got[["url", "start", "value"]], expected, tol=1e-9)
+    last = got[got["url"] == "LAST"].sort_values("start")
+    assert last["value"].tolist() == [7.0, 7.0, 4.0]
+    assert last["is_real"].tolist() == [True, False, True]
+
+
+def test_tier_rejects_gap_shorter_than_window():
+    """rollup_native merges a series' sessions per tier window, so a tier
+    whose session gap could split one window is refused at definition."""
+    import dataclasses
+
+    for tier in TIERS.values():
+        assert tier.gap_seconds is None or tier.gap_seconds >= tier.seconds
+    with pytest.raises(ValueError, match="gap_seconds"):
+        dataclasses.replace(TIERS["1h"], gap_seconds=1800)
+    assert dataclasses.replace(TIERS["1h"], gap_seconds=3600).gap_seconds == 3600

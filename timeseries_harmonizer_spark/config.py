@@ -30,6 +30,15 @@ class TierConfig:
     calendar: str | None = None  # "week" | "month": date_trunc windows
                                  # instead of fixed floor(ts/seconds)
 
+    def __post_init__(self):
+        # rollup_native merges sessions per tier window, so a session split
+        # must never fall inside one window
+        if self.gap_seconds is not None and self.gap_seconds < self.seconds:
+            raise ValueError(
+                f"tier {self.name!r}: gap_seconds={self.gap_seconds} is shorter "
+                f"than its {self.seconds} s window"
+            )
+
     @property
     def interval(self) -> str:
         return f"{self.seconds} seconds"

@@ -3,22 +3,25 @@
 Two implementations of the reference's ``harmonize_irregular_data``
 (reference lib2/__init__.py:26-42):
 
-1. ``rollup_exact`` — Arrow-batched ``applyInPandas`` per (series, session)
-   replaying the reference's 1s-grid resample + linear-interpolation
-   semantics bit-for-bit (the parity path). Group size is bounded by
-   sessionization, so the 1s materialization never exceeds one session span.
+1. ``rollup_exact`` / ``rollup_exact_chunked`` — Arrow-batched
+   ``applyInPandas`` per (series, session[, time chunk]) replaying the
+   reference's 1s-grid resample + linear-interpolation semantics for SUM
+   and AVG (the parity path; the chunked form is the pipeline's exact path
+   and bounds every Arrow group).
 
-2. ``rollup_native`` — the scale path: a closed-form, pure-DataFrame
-   derivation. Key observation: after placing each point at
-   ``floor(ts, 1s)`` and linearly interpolating, the per-second increment is
-   *constant within each inter-point segment* (slope = dv/ds). So the
-   tier-window sum/count/mean are exact segment-overlap arithmetic — no 1s
-   grid is ever materialized. Each segment explodes into only the tier
-   windows it overlaps (len/F + 1 rows), then a single groupBy(key, window)
-   merges. Mathematically identical to the replay; floating-point addition
-   order differs, so parity tests compare post-round(5).
+2. ``rollup_native`` — the scale path: SUM, AVG and LAST in one
+   closed-form, pure-DataFrame pass. Key observation: after placing each
+   point at ``floor(ts, 1s)`` and linearly interpolating, the per-second
+   increment is *constant within each inter-point segment* (slope = dv/ds).
+   So the tier-window sum/count/mean are exact segment-overlap arithmetic —
+   no 1s grid is ever materialized. Each segment explodes into only the
+   tier windows it overlaps (len/F + 1 rows); LAST's per-window last knot
+   explodes into the windows it carries forward (LOCF); a single
+   groupBy(key, window) merges. Mathematically identical to the replay;
+   floating-point addition order differs, so parity tests compare
+   post-round(5).
 
-LAST (R3) is fully native: tumbling max_by + dense window grid + LOCF.
+``rollup_native_last`` runs LAST over calendar (P1W/P1M) windows.
 
 Also here: R6 downsample (tier -> coarser tier), R7 upsample (ffill +
 sum-splitting), R8 dense reindex, and the north-star continuous aggregates
@@ -118,105 +121,7 @@ def _knots(df, key, ts_col, value, session_col):
     )
 
 
-def rollup_native_sum(
-    df: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    value: str = "value",
-    freq_seconds: int = 3600,
-    session_col: str | None = "session_id",
-    drop_neg: bool = True,
-) -> DataFrame:
-    """R1 closed form. Per segment (s1,v1)->(s2,v2): every second in
-    (s1, s2] carries increment slope=(v2-v1)/(s2-s1); negative-slope seconds
-    are *removed* (reference keeps only diffs >= 0), making their windows
-    incomplete. Window emitted iff kept-second count == freq."""
-    from timeseries_harmonizer_spark.operators.cleaning import drop_negative_diffs
-
-    if drop_neg:
-        keys = [key] + ([session_col] if session_col else [])
-        df = drop_negative_diffs(df.where(F.col(value).isNotNull()), keys, ts_col, value)
-    seg = _knots(df, key, ts_col, value, session_col).where(F.col("__s2").isNotNull())
-    Fs = freq_seconds
-    slope = (F.col("__v2") - F.col("__v")) / (F.col("__s2") - F.col("__s"))
-    # seconds covered by this segment: [s1+1, s2]
-    a = F.col("__s") + 1
-    b = F.col("__s2")
-    win0 = F.floor(a / Fs) * Fs
-    win1 = F.floor(b / Fs) * Fs
-    seg = seg.select(
-        "__k",
-        slope.alias("__slope"),
-        a.alias("__a"),
-        b.alias("__b"),
-        F.explode(F.sequence(win0, win1, F.lit(Fs))).alias("__w"),
-    )
-    ov = F.least(F.col("__b"), F.col("__w") + Fs - 1) - F.greatest(F.col("__a"), F.col("__w")) + 1
-    seg = seg.where(F.col("__slope") >= 0).withColumn("__ov", ov)
-    out = (
-        seg.groupBy("__k", "__w")
-        .agg(F.sum("__ov").alias("__cnt"), F.sum(F.col("__ov") * F.col("__slope")).alias("__sum"))
-        .where(F.col("__cnt") == Fs)
-        .select(
-            F.col("__k").alias(key),
-            F.timestamp_seconds(F.col("__w")).alias("start"),
-            F.col("__sum").alias(value),
-        )
-    )
-    return out
-
-
-def rollup_native_avg(
-    df: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    value: str = "value",
-    freq_seconds: int = 3600,
-    session_col: str | None = "session_id",
-) -> DataFrame:
-    """R2 closed form. Grid seconds [s1, s2) carry v1 + slope*(s-s1) (the
-    final knot contributes itself); window mean = sum/count over overlap,
-    emitted iff count == freq."""
-    knots = _knots(df, key, ts_col, value, session_col)
-    Fs = freq_seconds
-    # open segments [s1, s2-1]; terminal knot (s2 null) -> single second [s1, s1]
-    a = F.col("__s")
-    b = F.when(F.col("__s2").isNotNull(), F.col("__s2") - 1).otherwise(F.col("__s"))
-    slope = F.when(
-        F.col("__s2").isNotNull(),
-        (F.col("__v2") - F.col("__v")) / (F.col("__s2") - F.col("__s")),
-    ).otherwise(F.lit(0.0))
-    win0 = F.floor(a / Fs) * Fs
-    win1 = F.floor(b / Fs) * Fs
-    seg = knots.select(
-        "__k",
-        F.col("__s").alias("__s1"),
-        F.col("__v").alias("__v1"),
-        slope.alias("__slope"),
-        a.alias("__a"),
-        b.alias("__b"),
-        F.explode(F.sequence(win0, win1, F.lit(Fs))).alias("__w"),
-    )
-    lo = F.greatest(F.col("__a"), F.col("__w"))
-    hi = F.least(F.col("__b"), F.col("__w") + Fs - 1)
-    n = hi - lo + 1
-    # sum_{s=lo..hi} v1 + slope*(s - s1)  =  n*v1 + slope*(n*(lo+hi)/2 - n*s1)
-    mid = (lo + hi).cast("double") / 2.0
-    contrib = n.cast("double") * (F.col("__v1") + F.col("__slope") * (mid - F.col("__s1")))
-    seg = seg.withColumn("__n", n).withColumn("__contrib", contrib)
-    return (
-        seg.groupBy("__k", "__w")
-        .agg(F.sum("__n").alias("__cnt"), F.sum("__contrib").alias("__sum"))
-        .where(F.col("__cnt") == Fs)
-        .select(
-            F.col("__k").alias(key),
-            F.timestamp_seconds(F.col("__w")).alias("start"),
-            (F.col("__sum") / F.col("__cnt")).alias(value),
-        )
-    )
-
-
-def rollup_native_sum_avg(
+def rollup_native(
     df: DataFrame,
     key: str = "url",
     ts_col: str = "warc_ts",
@@ -224,94 +129,144 @@ def rollup_native_sum_avg(
     agg_col: str = "agg_func",
     freq_seconds: int = 3600,
     session_col: str | None = "session_id",
-    drop_neg: bool = True,
+    chunk_windows: int = 50_000,
 ) -> DataFrame:
-    """r6 optimization: the SUM and AVG closed-form rollups in ONE pass
-    over a frame whose aggregation function is declared per series
-    (``agg_col``, constant per key — the registry contract). The pipeline
-    previously filtered the cached ``prepared`` twice and re-sorted each
-    disjoint subset; this computes both with one knots window and one
-    merge aggregate, branching the segment arithmetic per row. The math is
-    rollup_native_sum / rollup_native_avg verbatim (see those docstrings):
-    per-branch rows, expressions and float operation order are identical,
-    so results match the separate operators bit-for-bit."""
+    """R1/R2/R3 closed form: SUM, AVG and LAST in one pass over a frame
+    whose aggregation function is declared per series (``agg_col``,
+    constant per key — the registry contract). Output: (key, start, value,
+    is_real); null values are dropped first.
+
+    One knots aggregate per (series, session, second) keeps the mean of
+    colliding raw rows (the replay's 1s resample) and, for LAST, the later
+    row (``max_by``). One ``lead`` window attaches the next knot. Each kept
+    knot then covers an inclusive second range and explodes into the tier
+    windows it overlaps; one merge aggregate per (series, window) emits
+    windows whose count reaches ``freq_seconds``:
+
+    * SUM: segment (s1, v1)->(s2, v2) covers seconds (s1, s2], each carrying
+      the increment (v2-v1)/(s2-s1); negative-slope segments are removed
+      (the reference keeps only diffs >= 0), making their windows
+      incomplete. Rows whose raw diff is negative are dropped before the
+      knots (R1 step 1).
+    * AVG: grid seconds [s1, s2-1] carry v1 + slope*(s-s1), the terminal
+      knot [s1, s1]; window value = sum / count.
+    * LAST: only the last knot of each tier window is kept. It claims every
+      window up to (exclusive) the next observed one, or just its own at the
+      end of the session — LOCF that never bridges a session gap, matching
+      the reference's per-part harmonization (reference
+      harmonizers/__init__.py:379-383). Each claimed window counts as
+      complete; ``is_real`` is true only for the knot's own window (the
+      reference's isReal flag, lib/__init__.py:157-166) and for every
+      SUM/AVG window.
+
+    Volume bound: a segment or claim that spans a long gap (tiers with
+    ``gap_check=None`` have unbounded sessions) explodes in two levels — the
+    outer sequence steps in spans of ``chunk_windows`` windows, the inner in
+    windows — so no generator batch exceeds ``chunk_windows`` rows (~35
+    days at 1m, ~5.7 years at 1h).
+
+    Precondition: ``session_col`` splits a series only at gaps of at least
+    ``freq_seconds`` (``gap_seconds is None or gap_seconds >= seconds``,
+    enforced by ``TierConfig``). The merge groups across sessions, so two
+    sessions sharing a tier window would merge into it."""
     Fs = freq_seconds
+    span_s = int(chunk_windows) * Fs  # explode-batch bound, in seconds
     sess = F.col(session_col) if session_col else F.lit(0)
-    df = df.where(F.col(value).isNotNull())
-    if drop_neg:
-        # R1 step 1, SUM rows only. Series are homogeneous in agg_col, so
-        # the lag over (key, session) sees exactly the rows the SUM-only
-        # operator's drop_negative_diffs saw.
-        keys = [key] + ([session_col] if session_col else [])
-        wd = W.partitionBy(*keys).orderBy(ts_col)
-        diff = F.col(value) - F.lag(value).over(wd)
-        df = (
-            df.withColumn(
-                "__negdrop",
-                (F.col(agg_col) == "SUM") & F.coalesce(diff < 0, F.lit(False)),
-            )
-            .where(~F.col("__negdrop"))
-            .drop("__negdrop")
+    # R1 step 1, SUM rows only; series are homogeneous in agg_col
+    keys = [key] + ([session_col] if session_col else [])
+    diff = F.col(value) - F.lag(value).over(W.partitionBy(*keys).orderBy(ts_col))
+    df = (
+        df.where(F.col(value).isNotNull())
+        .withColumn(
+            "__negdrop",
+            (F.col(agg_col) == "SUM") & F.coalesce(diff < 0, F.lit(False)),
         )
+        .where(~F.col("__negdrop"))
+    )
     pts = (
         df.select(
             F.col(key).alias("__k"),
             sess.alias("__sess"),
             F.col(agg_col).alias("__agg"),
             F.unix_timestamp(F.col(ts_col)).alias("__s"),
+            F.col(ts_col).alias("__ts"),
             F.col(value).alias("__v"),
         )
         .groupBy("__k", "__sess", "__agg", "__s")
-        .agg(F.avg("__v").alias("__v"))
+        .agg(F.avg("__v").alias("__v"), F.max_by("__v", "__ts").alias("__last"))
     )
     wl = W.partitionBy("__k", "__sess").orderBy("__s")
     knots = pts.select(
-        "__k", "__agg", "__s", "__v",
+        "__k", "__agg", "__s", "__v", "__last",
         F.lead("__s").over(wl).alias("__s2"),
         F.lead("__v").over(wl).alias("__v2"),
-    ).where(F.col("__s2").isNotNull() | (F.col("__agg") != "SUM"))
+    )
     is_sum = F.col("__agg") == "SUM"
+    is_last = F.col("__agg") == "LAST"
     slope = F.when(
         F.col("__s2").isNotNull(),
         (F.col("__v2") - F.col("__v")) / (F.col("__s2") - F.col("__s")),
     ).otherwise(F.lit(0.0))
-    # SUM covers seconds (s1, s2]; AVG covers [s1, s2-1] (+ terminal [s1, s1])
+    next_w = F.floor(F.col("__s2") / Fs) * Fs
+    keep = (
+        F.when(is_sum, F.col("__s2").isNotNull() & (slope >= 0))
+        .when(is_last, F.coalesce(next_w != F.floor(F.col("__s") / Fs) * Fs, F.lit(True)))
+        .otherwise(F.lit(True))
+    )
+    # inclusive second range: SUM (s1, s2]; AVG [s1, s2-1]; LAST [s1,
+    # next observed window - 1]; a terminal knot [s1, s1]
     a = F.when(is_sum, F.col("__s") + 1).otherwise(F.col("__s"))
-    b = F.when(
-        F.col("__s2").isNotNull(),
-        F.when(is_sum, F.col("__s2")).otherwise(F.col("__s2") - 1),
-    ).otherwise(F.col("__s"))
+    b = F.when(F.col("__s2").isNull(), F.col("__s")).when(is_sum, F.col("__s2")).when(
+        is_last, next_w - 1
+    ).otherwise(F.col("__s2") - 1)
     win0 = F.floor(a / Fs) * Fs
     win1 = F.floor(b / Fs) * Fs
-    seg = knots.select(
-        "__k", "__agg",
+    seg = knots.where(keep).select(
+        "__k", "__agg", "__last",
         F.col("__s").alias("__s1"),
         F.col("__v").alias("__v1"),
         slope.alias("__slope"),
         a.alias("__a"),
         b.alias("__b"),
-        F.explode(F.sequence(win0, win1, F.lit(Fs))).alias("__w"),
-    ).where((F.col("__agg") != "SUM") | (F.col("__slope") >= 0))
+        win0.alias("__w0"),
+        win1.alias("__w1"),
+    )
+    sub = seg.withColumn("__sub", F.explode(F.sequence("__w0", "__w1", F.lit(span_s))))
+    sub_end = F.least(F.col("__w1"), F.col("__sub") + F.lit(span_s - Fs))
+    seg = sub.withColumn("__w", F.explode(F.sequence("__sub", sub_end, F.lit(Fs))))
     lo = F.greatest(F.col("__a"), F.col("__w"))
     hi = F.least(F.col("__b"), F.col("__w") + Fs - 1)
-    n = hi - lo + 1
+    n = F.when(is_last, F.lit(Fs)).otherwise(hi - lo + 1)
+    # sum_{s=lo..hi} v1 + slope*(s - s1)  =  n*v1 + slope*(n*(lo+hi)/2 - n*s1)
     mid = (lo + hi).cast("double") / 2.0
-    contrib = F.when(is_sum, n * F.col("__slope")).otherwise(
-        n.cast("double")
-        * (F.col("__v1") + F.col("__slope") * (mid - F.col("__s1")))
+    contrib = (
+        F.when(is_sum, n * F.col("__slope"))
+        .when(is_last, F.col("__last"))
+        .otherwise(
+            n.cast("double")
+            * (F.col("__v1") + F.col("__slope") * (mid - F.col("__s1")))
+        )
     )
+    real = ~is_last | (F.col("__w") == F.col("__w0"))  # LAST: its own window
     return (
-        seg.withColumn("__n", n)
-        .withColumn("__c", contrib)
+        seg.select(
+            "__k", "__agg", "__w",
+            n.alias("__n"), contrib.alias("__c"), real.alias("__real"),
+        )
         .groupBy("__k", "__agg", "__w")
-        .agg(F.sum("__n").alias("__cnt"), F.sum("__c").alias("__sum"))
+        .agg(
+            F.sum("__n").alias("__cnt"),
+            F.sum("__c").alias("__sum"),
+            F.max("__real").alias("is_real"),
+        )
         .where(F.col("__cnt") == Fs)
         .select(
             F.col("__k").alias(key),
             F.timestamp_seconds(F.col("__w")).alias("start"),
-            F.when(is_sum, F.col("__sum"))
-            .otherwise(F.col("__sum") / F.col("__cnt"))
+            F.when(F.col("__agg") == "AVG", F.col("__sum") / F.col("__cnt"))
+            .otherwise(F.col("__sum"))
             .alias(value),
+            "is_real",
         )
     )
 
@@ -373,29 +328,16 @@ def rollup_native_last(
     key: str = "url",
     ts_col: str = "warc_ts",
     value: str = "value",
-    freq_seconds: int | str = 3600,
+    freq_seconds: str = "P1M",
     session_col: str | None = None,
-    chunk_windows: int = 50_000,
 ) -> DataFrame:
-    """R3 native: tumbling last non-null value + LOCF across the dense
-    window grid of each (series, session) — LOCF never bridges a session
-    gap, matching the reference's per-part harmonization (reference
-    harmonizers/__init__.py:379-383). Adds ``is_real`` = window had a raw
-    observation (false -> LOCF-filled), the reference's isReal flag
-    (reference lib/__init__.py:157-166).
-
-    freq_seconds: window width in seconds, or 'P1W'/'P1M' for calendar
-    windows (date_trunc labels, interval-stepped dense grid).
-
-    Volume bound (the 100x argument): tiers with ``gap_check=None`` (1d)
-    have unbounded sessions, so one url with years of sparse history would
-    otherwise explode its whole span as ONE generator batch. Integer-
-    frequency grids therefore bound every ``sequence``/explode batch at
-    ``chunk_windows`` windows (~35 days at 1m, ~5.7 years at 1h) via a
-    two-level explode over each observed window's claim span (see the
-    claim-span comment in the body). Calendar grids (P1W/P1M) keep the
-    direct span grid: decades are only hundreds of windows."""
-    calendar = isinstance(freq_seconds, str)
+    """R3 over calendar windows ('P1W'/'P1M': date_trunc labels, an
+    interval-stepped dense grid): tumbling last non-null value + LOCF
+    across the grid of each (series, session), with ``is_real`` as in
+    ``rollup_native``, which serves fixed-width tiers. Decades are only
+    hundreds of calendar windows, so the grid needs no chunking."""
+    if not isinstance(freq_seconds, str):
+        raise ValueError("fixed-width LAST rollups run in rollup_native")
     sess = F.col(session_col) if session_col else F.lit(0)
     win = _window_col(F.col(ts_col), freq_seconds, is_ts=True).alias("__w")
     per_win = (
@@ -406,70 +348,22 @@ def rollup_native_last(
             F.count(F.col(ts_col)).alias("__nraw"),
         )
     )
-    is_real = F.coalesce(F.col("__nraw") > 0, F.lit(False)).alias("is_real")
-    if calendar:
-        spans = per_win.groupBy("__k", "__sess").agg(
-            F.min("__w").alias("__w0"), F.max("__w").alias("__w1")
-        )
-        grid = spans.select(
-            "__k", "__sess",
-            F.explode(
-                F.sequence("__w0", "__w1", F.expr(_calendar_interval(freq_seconds)))
-            ).alias("__w"),
-        )
-        joined = grid.join(per_win, ["__k", "__sess", "__w"], "left")
-        w = (
-            W.partitionBy("__k", "__sess")
-            .orderBy("__w")
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        return joined.select(
-            F.col("__k").alias(key),
-            F.col("__w").alias("start"),
-            F.last("__last", ignorenulls=True).over(w).alias(value),
-            is_real,
-        )
-    step = int(freq_seconds)
-    span_s = int(chunk_windows) * step  # explode-batch bound, in seconds
-    # r6 optimization (claim-span formulation): the dense grid + LEFT JOIN
-    # + per-chunk LOCF + carry-in machinery is equivalent to each observed
-    # window CLAIMING every grid slot up to (exclusive) the next observed
-    # window, filled with the running last non-null value at the claimant —
-    # the same derivation as `upsample`'s ffill. One window pass computes
-    # both the carry (last non-null __last so far) and the claim end
-    # (lead(__w) - step); a chunk-bounded double explode emits the slots.
-    # This removes the grid/per_win join, three groupBys and a second
-    # window sort from the old plan (plan: 2 exchanges fewer), while the
-    # per-row explode stays bounded: the outer sequence steps in chunk
-    # spans (gap/span rows), the inner in windows (<= chunk_windows rows).
-    wspec = W.partitionBy("__k", "__sess").orderBy("__w")
-    carry = F.last("__last", ignorenulls=True).over(
-        wspec.rowsBetween(W.unboundedPreceding, 0)
+    spans = per_win.groupBy("__k", "__sess").agg(
+        F.min("__w").alias("__w0"), F.max("__w").alias("__w1")
     )
-    nxt = F.lead("__w").over(wspec)
-    claims = per_win.where(F.col("__w").isNotNull()).select(
-        "__k",
-        "__w",
-        "__nraw",
-        carry.alias("__fill"),
-        F.coalesce(nxt - step, F.col("__w")).alias("__end"),  # inclusive
+    grid = spans.select(
+        "__k", "__sess",
+        F.explode(
+            F.sequence("__w0", "__w1", F.expr(_calendar_interval(freq_seconds)))
+        ).alias("__w"),
     )
-    sub = claims.select(
-        "__k", "__w", "__nraw", "__fill", "__end",
-        F.explode(F.sequence("__w", "__end", F.lit(span_s))).alias("__sub"),
-    )
-    slot_end = F.least(F.col("__end"), F.col("__sub") + F.lit(span_s - step))
-    slots = sub.select(
-        "__k", "__w", "__nraw", "__fill",
-        F.explode(F.sequence(F.col("__sub"), slot_end, F.lit(step))).alias("__slot"),
-    )
-    return slots.select(
+    joined = grid.join(per_win, ["__k", "__sess", "__w"], "left")
+    w = W.partitionBy("__k", "__sess").orderBy("__w").rowsBetween(W.unboundedPreceding, 0)
+    return joined.select(
         F.col("__k").alias(key),
-        F.timestamp_seconds(F.col("__slot")).alias("start"),
-        F.col("__fill").alias(value),
-        ((F.col("__slot") == F.col("__w")) & F.coalesce(F.col("__nraw") > 0, F.lit(False))).alias(
-            "is_real"
-        ),
+        F.col("__w").alias("start"),
+        F.last("__last", ignorenulls=True).over(w).alias(value),
+        F.coalesce(F.col("__nraw") > 0, F.lit(False)).alias("is_real"),
     )
 
 

@@ -3,10 +3,9 @@
 scan -> extract -> dedup -> enrich (broadcast registry) -> unit convert ->
 sessionize -> clean -> rollup -> shape points -> write tier payloads.
 
-Stage boundaries are Catalyst's; the explicit knobs are the bucket-hash
-repartition before the per-series stages (the storage analog of the
-reference's ``bucket = (ts // TS_BUCKETS) % BUCKETS``, lib/__init__.py:140)
-and sessionization, which bounds per-group state for the Arrow stages.
+Stage boundaries are Catalyst's; the one explicit exchange is prepare's url
+repartition, which every per-series stage downstream reuses, and
+sessionization bounds per-group state for the Arrow stages.
 """
 
 from __future__ import annotations
@@ -22,20 +21,13 @@ from timeseries_harmonizer_spark.config import (
 )
 from timeseries_harmonizer_spark.functions.extract import extract_text
 from timeseries_harmonizer_spark.operators.cleaning import unit_convert
-from timeseries_harmonizer_spark.operators.dedup import keep_last, keep_last_sorted
+from timeseries_harmonizer_spark.operators.dedup import keep_last_sorted
 from timeseries_harmonizer_spark.operators.rollup import (
     continuous_aggregate,
     rollup_exact_chunked,
-    rollup_native_last,
-    rollup_native_sum_avg,
+    rollup_native,
 )
 from timeseries_harmonizer_spark.operators.sessionize import sessionize
-
-
-def bucket_repartition(df: DataFrame, key: str = "url", n_buckets: int = N_BUCKETS) -> DataFrame:
-    """Explicit bucket-hash repartitioning: co-locates every row of a series
-    (and everything downstream keyed on it) in one shuffle."""
-    return df.repartition(n_buckets, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
 
 
 def prepare(
@@ -85,16 +77,17 @@ def rollup_points(
     exact: bool = False,
 ) -> DataFrame:
     """Per-series rollup at the tier frequency, honoring each series'
-    aggregation function; exact=True uses the reference-replay Arrow path,
-    else the closed-form native path (same semantics, see operators.rollup).
+    aggregation function: one ``rollup_native`` pass (closed form, see
+    operators.rollup); exact=True replays SUM/AVG on the reference-replay
+    Arrow path instead and keeps LAST native.
 
     The exact path is always *chunked* (rollup_exact_chunked): Arrow group
     memory is bounded by chunk span even for gapless series — the 1d tier has
     gap_seconds=None, so without chunking one hot url would materialize its
     entire history as a single 1s grid (the reference's memory hazard at
     lib2/__init__.py:30). SUM/AVG windows that pass the completeness gate
-    always contain real observations -> is_real=True; LAST uses the native
-    operator, which derives is_real per window (LOCF fills are False)."""
+    always contain real observations -> is_real=True; LAST derives is_real
+    per window (LOCF fills are False)."""
     if exact:
         sums = rollup_exact_chunked(
             prepared.where(F.col("agg_func") == "SUM"),
@@ -110,28 +103,13 @@ def rollup_points(
             session_col="session_id",
             chunk_windows=EXACT_CHUNK_WINDOWS,
         ).withColumn("is_real", F.lit(True))
-        lasts = rollup_native_last(
+        lasts = rollup_native(
             prepared.where(F.col("agg_func") == "LAST"),
             freq_seconds=tier.seconds,
             session_col="session_id",
         )
         return sums.unionByName(avgs).unionByName(lasts)
-    # r6: SUM and AVG share one knots pass + merge aggregate instead of
-    # filtering (and re-sorting) the cached frame once per branch — the
-    # per-branch math in rollup_native_sum_avg is the separate operators'
-    # verbatim (equality pinned by test_sum_avg_combined_equals_separate
-    # and the oracle parity suite).
-    sum_avgs = rollup_native_sum_avg(
-        prepared.where(F.col("agg_func").isin("SUM", "AVG")),
-        freq_seconds=tier.seconds,
-        session_col="session_id",
-    ).withColumn("is_real", F.lit(True))
-    lasts = rollup_native_last(
-        prepared.where(F.col("agg_func") == "LAST"),
-        freq_seconds=tier.seconds,
-        session_col="session_id",
-    )
-    return sum_avgs.unionByName(lasts)
+    return rollup_native(prepared, freq_seconds=tier.seconds, session_col="session_id")
 
 
 def shape_points(
@@ -171,15 +149,13 @@ def run_tier(
     registry: DataFrame,
     tier_name: str = "1h",
     exact: bool = False,
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Full plan for one tier: returns (points, tier_payloads).
 
-    ``prepared`` feeds four consumers (SUM/AVG/LAST rollup branches +
-    payloads); persisting it turns 4 recomputations of
-    scan->extract->dedup->join->sessionize into one (the extract UDF and the
-    dedup shuffle are the expensive part — this is the analog of the
-    reference writing the cleaned series once per run)."""
+    Each returned frame is its own lineage from the scan: on the points
+    path ``prepared`` has one consumer, the single rollup pass, so nothing
+    is cached. A caller that acts on both frames runs prepare twice, or
+    persists the inputs it shares."""
     tier = TIERS[tier_name]
     if tier.calendar:
         raise ValueError(
@@ -190,20 +166,8 @@ def run_tier(
             "rollup_native_last, or the formula engine."
         )
     prepared = prepare(pages, registry, tier)
-    # r6: persist only the columns the rollup/payload consumers read.
-    # prepare's output still carries the full registry enrichment
-    # (series_hash 64-char strings, conversion factors, max_power) — caching
-    # those builds and stores ~2x the bytes for columns no consumer of
-    # `prepared` touches (shape_points re-joins the broadcast registry for
-    # the point record). Guide §2.3: narrower rows, cheaper materialization.
-    prepared = prepared.select(
-        "url", "warc_ts", "value", "lang", "agg_func", "session_id"
-    )
-    if persist:
-        prepared = prepared.persist()
     pts = shape_points(rollup_points(prepared, tier, exact=exact), registry, tier)
-    payloads = tier_payloads(prepared, tier)
-    return pts, payloads
+    return pts, tier_payloads(prepared, tier)
 
 
 def run_postprocessors(
