@@ -3,7 +3,6 @@ driver; this file is free-form per the optimization brief).
 
 Modes:
   python bench_extra.py queries [names...]   — noop-sink + count timing per headliner
-  python bench_extra.py flagship             — staged flagship timing (noop sinks)
   python bench_extra.py explain <out_dir>    — dump .explain("formatted") per query
 
 Timing methodology mirrors bench.py: same session config, same sf dir, one
@@ -19,8 +18,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import Observation, functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timeseries_harmonizer_spark.session import get_spark  # noqa: E402
@@ -87,80 +84,6 @@ def mode_queries(names):
                       "summary_noop_min": {k: v["noop_min"] for k, v in res.items()}}))
 
 
-def mode_flagship():
-    """Stage-by-stage flagship decomposition at bench sizing."""
-    from timeseries_harmonizer_spark.config import TIERS
-    from timeseries_harmonizer_spark.operators.compress import compress_points
-    from timeseries_harmonizer_spark.plans import pipeline
-
-    spark, sf = _spark()
-    n_urls = max(200, int(2000 * sf * 10))
-    ppu = 300
-    from bench import _gen_pages
-
-    pages, reg = _gen_pages(spark, "/tmp/bx_pages", n_urls, ppu)
-    reg.cache().count()
-    tier = TIERS["1h"]
-
-    def run_full():
-        pts, _ = pipeline.run_tier(pages, reg, "1h")
-        obs = Observation()
-        pts = pts.observe(obs, F.count(F.lit(1)).alias("n"))
-        blobs = compress_points(pts.select("url", "start", "value"), "1h")
-        blobs.write.mode("overwrite").parquet("/tmp/bx_blobs")
-        return int(obs.get["n"])
-
-    stages = {}
-
-    def staged(label, fn, passes=2):
-        times = []
-        for _ in range(passes):
-            spark.catalog.clearCache()
-            reg.cache().count()
-            spark.sparkContext.setJobDescription(label)
-            t0 = time.perf_counter()
-            fn()
-            times.append(round(time.perf_counter() - t0, 3))
-        stages[label] = times
-        print(json.dumps({label: times}), flush=True)
-
-    # warmup
-    run_full()
-
-    staged("full_once", run_full, passes=3)
-
-    # prepare only (no persist)
-    staged("prepare_noop", lambda: _noop(pipeline.prepare(pages, reg, tier)))
-
-    # extract+value only (scan-side, pre-shuffle)
-    from timeseries_harmonizer_spark.functions.extract import extract_text
-
-    def extract_only():
-        df = pages.withColumn("text", extract_text(F.col("html")))
-        df = df.withColumn("value", F.length("text").cast("double"))
-        _noop(df.select("url", "warc_ts", "ingest_pos", "value", "lang"))
-
-    staged("extract_noop", extract_only)
-
-    # prepare + rollup pass (shaped), no compress
-    def rollup_only():
-        prepared = pipeline.prepare(pages, reg, tier)
-        _noop(pipeline.shape_points(pipeline.rollup_points(prepared, tier), reg, tier))
-
-    staged("rollup_shaped_noop", rollup_only)
-
-    # full minus parquet write: compress to noop
-    def compress_noop():
-        pts, _ = pipeline.run_tier(pages, reg, "1h")
-        blobs = compress_points(pts.select("url", "start", "value"), "1h")
-        _noop(blobs)
-
-    staged("compress_noop", compress_noop)
-
-    print(json.dumps({"stages_min": {k: min(v) for k, v in stages.items()},
-                      "n_urls": n_urls, "sf": sf}))
-
-
 def mode_explain(out_dir):
     os.makedirs(out_dir, exist_ok=True)
     spark, sf = _spark()
@@ -193,8 +116,6 @@ if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if mode == "queries":
         mode_queries(sys.argv[2:])
-    elif mode == "flagship":
-        mode_flagship()
     elif mode == "explain":
         mode_explain(sys.argv[2] if len(sys.argv) > 2 else "plans/r06/probe")
     else:

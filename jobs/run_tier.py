@@ -5,7 +5,7 @@ Usage:
       --tier 1h --warehouse /path/wh --run-id 2024-01-07T00 \
       [--input /path/web_pages.parquet [--registry /path/registry.parquet]
        [--ts-end 2024-01-07T00:00:00]] \
-      [--n-urls 200 --points-per-url 500] [--exact]
+      [--n-urls 200 --points-per-url 500]
 
 Input: ``--input`` points at an existing ``web_pages`` parquet/table and the
 run reads only the tier's lookback window ending at ``--ts-end`` (default:
@@ -54,7 +54,6 @@ def main(argv=None):
     ap.add_argument("--n-urls", type=int, default=100)
     ap.add_argument("--points-per-url", type=int, default=300)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--exact", action="store_true")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
@@ -96,7 +95,7 @@ def main(argv=None):
 
     def stage_points():
         pts = pipeline.shape_points(
-            pipeline.rollup_points(prepared, tier, exact=args.exact), reg, tier
+            pipeline.rollup_points(prepared, tier), reg, tier
         ).withColumn("snapshot_id", F.lit(catalog.last_snapshot_id(f"points_{tier.name}") or 0) + 1)
         snap = catalog.write(
             f"points_{tier.name}", pts, mode="append", partition_by=["bucket"],

@@ -237,3 +237,26 @@ def test_upsample_duplicate_start_tolerated(spark):
     jan1 = out[(out["start"] >= days[0]) & (out["start"] < days[2])]
     np.testing.assert_allclose(sorted(jan1["value"].unique()), [2.0, 24.0])
     np.testing.assert_allclose(out["value"].sum(), 24.0 + 48.0 + 96.0)
+
+
+def test_upsample_duplicate_start_deterministic(spark):
+    """Which duplicate (key, start) row claims the single slot must not
+    depend on input order: the same rows reversed, in one partition or
+    spread over several, give identical output."""
+    from timeseries_harmonizer_spark.operators.rollup import upsample
+
+    days = pd.to_datetime(["2024-01-01", "2024-01-01", "2024-01-02"])
+    pdf = pd.DataFrame({"url": "u", "start": days, "value": [24.0, 48.0, 96.0]})
+    rev = pdf.iloc[::-1].reset_index(drop=True)
+
+    def run(df):
+        out = upsample(df, agg="sum", from_seconds=86400, to_seconds=3600)
+        return out.orderBy("start", "value").toPandas()
+
+    base = run(spark.createDataFrame(pdf).coalesce(1))
+    for df in (
+        spark.createDataFrame(rev).coalesce(1),
+        spark.createDataFrame(rev).repartition(3),
+    ):
+        pd.testing.assert_frame_equal(run(df), base)
+    assert base[base["start"] == days[0]]["value"].tolist() == [2.0, 24.0]

@@ -218,13 +218,19 @@ def test_zipf_fixture_partition_balance(spark):
 
 def test_hot_series_task_input_bounded(spark):
     """One pathological hot SERIES (40k points, single session) vs cold
-    urls: the exact path's (url, session, time-chunk) grouping bounds every
-    Arrow group's input regardless of how hot the series is — measured, not
-    asserted from the plan."""
+    urls: rollup_exact_chunked's (url, session, time-chunk) grouping bounds
+    every Arrow group's input regardless of how hot the series is —
+    measured at its default chunk span, not asserted from the plan."""
+    import inspect
+
     import numpy as np
     import pandas as pd
 
-    from timeseries_harmonizer_spark.config import EXACT_CHUNK_WINDOWS
+    from timeseries_harmonizer_spark.operators.rollup import rollup_exact_chunked
+
+    chunk_windows = (
+        inspect.signature(rollup_exact_chunked).parameters["chunk_windows"].default
+    )
 
     cadence = 30
     n_hot = 40_000
@@ -247,7 +253,7 @@ def test_hot_series_task_input_bounded(spark):
         }
     )
     df = spark.createDataFrame(pd.concat([hot, cold]))
-    span = EXACT_CHUNK_WINDOWS * 3600
+    span = chunk_windows * 3600
     groups = (
         df.groupBy(
             "url", F.floor(F.unix_timestamp("warc_ts") / span).alias("chunk")

@@ -512,6 +512,25 @@ def test_connected_components_star_path_graph_log_rounds(spark):
     assert tuple(a) == (1, 0)
 
 
+def test_connected_components_label_converges_on_max_iter(spark):
+    """A path graph of diameter d reaches its fixed point in exactly d
+    min-label rounds; label mode with max_iter=d confirms it with one idle
+    round instead of raising. A path one edge longer still raises."""
+    import pytest
+
+    d = 4
+    path = spark.range(d).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    out = D.connected_components(path, algorithm="label", max_iter=d).toPandas()
+    assert out.set_index("id")["component"].to_dict() == {i: 0 for i in range(d + 1)}
+    longer = spark.range(d + 1).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.connected_components(longer, algorithm="label", max_iter=d)
+
+
 def test_connected_components_label_unconverged_raises(spark):
     """ADVICE r5: opt-in 'label' mode must fail loudly when max_iter rounds
     leave labels mid-propagation (silently-partial components), while the

@@ -109,24 +109,10 @@ TIERS: dict[str, TierConfig] = {
     ),
 }
 
-# Aggregation functions a series can declare (reference
-# lib2/calculate_formulas.py:43-47 maps aggregationFunction -> {SUM: sum,
-# AVG: mean, LAST: last}).
-AGG_FUNCS = ("SUM", "AVG", "LAST")
-
-# Number of hash buckets for explicit bucket repartitioning (the storage
-# analog is the reference's bucket = (ts // TS_BUCKETS) % BUCKETS,
+# Number of storage hash buckets: the bucket id shape_points writes (the
+# analog of the reference's bucket = (ts // TS_BUCKETS) % BUCKETS,
 # lib/__init__.py:140).
 N_BUCKETS = 64
-
-# Hot-series skew guard for the exact (Arrow) path: groups are split by
-# time into chunks of EXACT_CHUNK_WINDOWS tier windows with a one-point
-# overlap, then partial-merged (operators.rollup.rollup_exact_chunked) — a
-# deterministic salting of the group key by time. The native closed-form
-# path needs no salting: its aggregates are algebraic and combine map-side
-# (§4 of SURVEY.md — the reference has no skew handling; a huge device just
-# made one pod slow).
-EXACT_CHUNK_WINDOWS = 24
 
 # Values are rounded to 5 decimals before emit (reference
 # harmonizers/__init__.py:233).

@@ -36,10 +36,6 @@ def extract_text(html) -> F.Column:
     return F.substring(m, 4, F.length(m) - 7)
 
 
-def with_extracted_text(df: DataFrame, html_col: str = "html", out_col: str = "extracted_text") -> DataFrame:
-    return df.withColumn(out_col, extract_text(F.col(html_col)))
-
-
 def typed_value_extract(
     df: DataFrame,
     kind_col: str = "kind",

@@ -283,18 +283,6 @@ def drop_negative_diffs(series: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# R8 — dense reindex (reference lib2/__init__.py:64-71)
-# ---------------------------------------------------------------------------
-
-def complete_missing_points(
-    series: pd.Series, ts_ini: pd.Timestamp, ts_end: pd.Timestamp, freq_seconds: int
-) -> pd.Series:
-    freq = pd.Timedelta(seconds=freq_seconds)
-    grid = pd.date_range(ts_ini.floor(freq), ts_end.floor(freq), freq=freq)
-    return series.reindex(grid)
-
-
-# ---------------------------------------------------------------------------
 # K1 — PV energy-balance repair (reference post_process/pv_postprocess.py:26-68)
 # ---------------------------------------------------------------------------
 

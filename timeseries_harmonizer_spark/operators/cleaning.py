@@ -66,11 +66,6 @@ def clip_at_zero(df: DataFrame, value: str = "value") -> DataFrame:
     return df.withColumn(value, F.greatest(F.col(value), F.lit(0.0)))
 
 
-def round_values(df: DataFrame, value: str = "value", digits: int = 5) -> DataFrame:
-    """P9 (reference harmonizers/__init__.py:233)."""
-    return df.withColumn(value, F.round(F.col(value), digits))
-
-
 # ---------------------------------------------------------------------------
 # Window-expression cleaners (pure Catalyst, one shuffle on the series key)
 # ---------------------------------------------------------------------------

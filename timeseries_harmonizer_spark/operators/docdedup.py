@@ -466,7 +466,9 @@ def connected_components(
     diameter rounds."""
     if algorithm == "star":
         return connected_components_star(pairs, id_a, id_b)
-    switch_after = 4 if algorithm == "auto" else max_iter
+    # 'label' gets one idle round beyond max_iter: a fixed point reached in
+    # round max_iter is only confirmed by a round that changes nothing
+    rounds = min(4, max_iter) if algorithm == "auto" else max_iter + 1
     edges = (
         pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
         .unionByName(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
@@ -479,7 +481,7 @@ def connected_components(
         .localCheckpoint()
     )
     converged = False
-    for i in range(min(switch_after, max_iter)):
+    for _ in range(rounds):
         nbr = (
             edges.withColumnRenamed("s", "id")
             .join(labels, "id")

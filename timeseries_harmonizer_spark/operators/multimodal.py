@@ -24,12 +24,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, width int, height int, duration_s double, "
-    "payload binary"
-)
-
-
 # ---------------------------------------------------------------------------
 # Pure-numpy codecs (no external libraries)
 # ---------------------------------------------------------------------------

@@ -3,23 +3,23 @@
 Two implementations of the reference's ``harmonize_irregular_data``
 (reference lib2/__init__.py:26-42):
 
-1. ``rollup_exact`` / ``rollup_exact_chunked`` — Arrow-batched
-   ``applyInPandas`` per (series, session[, time chunk]) replaying the
-   reference's 1s-grid resample + linear-interpolation semantics for SUM
-   and AVG (the parity path; the chunked form is the pipeline's exact path
-   and bounds every Arrow group).
+1. ``rollup_native`` — the tier pipeline's one rollup pass: SUM, AVG and
+   LAST in one closed-form, pure-DataFrame pass. Key observation: after
+   placing each point at ``floor(ts, 1s)`` and linearly interpolating, the
+   per-second increment is *constant within each inter-point segment*
+   (slope = dv/ds). So the tier-window sum/count/mean are exact
+   segment-overlap arithmetic — no 1s grid is ever materialized. Each
+   segment explodes into only the tier windows it overlaps (len/F + 1
+   rows); LAST's per-window last knot explodes into the windows it carries
+   forward (LOCF); a single groupBy(key, window) merges. Mathematically
+   identical to the replay; floating-point addition order differs, so
+   parity tests compare post-round(5).
 
-2. ``rollup_native`` — the scale path: SUM, AVG and LAST in one
-   closed-form, pure-DataFrame pass. Key observation: after placing each
-   point at ``floor(ts, 1s)`` and linearly interpolating, the per-second
-   increment is *constant within each inter-point segment* (slope = dv/ds).
-   So the tier-window sum/count/mean are exact segment-overlap arithmetic —
-   no 1s grid is ever materialized. Each segment explodes into only the
-   tier windows it overlaps (len/F + 1 rows); LAST's per-window last knot
-   explodes into the windows it carries forward (LOCF); a single
-   groupBy(key, window) merges. Mathematically identical to the replay;
-   floating-point addition order differs, so parity tests compare
-   post-round(5).
+2. ``rollup_exact_chunked`` — Arrow-batched ``applyInPandas`` per
+   (series, session, time chunk) replaying the reference's 1s-grid
+   resample + linear-interpolation semantics for SUM and AVG. Time chunks
+   salt the group key, so a hot series never becomes one unbounded Arrow
+   group. It runs the q37 replay query, not the tier pipeline.
 
 ``rollup_native_last`` runs LAST over calendar (P1W/P1M) windows.
 
@@ -54,44 +54,6 @@ def _window_col(ts_seconds_or_col, freq: int | str, is_ts: bool = False):
 
 def _calendar_interval(freq: str) -> str:
     return "interval 1 month" if freq == "P1M" else "interval 1 week"
-
-
-# ---------------------------------------------------------------------------
-# Exact replay (parity path)
-# ---------------------------------------------------------------------------
-
-def rollup_exact(
-    df: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    value: str = "value",
-    agg_func_col: str = "agg_func",
-    freq_seconds: int = 3600,
-    session_col: str | None = "session_id",
-) -> DataFrame:
-    """R1/R2/R3 via per-(key, session) pandas replay.
-
-    Output: (key, start TIMESTAMP, value DOUBLE) — window label = window
-    start, matching pandas resample's label='left'.
-    """
-    group_cols = [key] + ([session_col] if session_col else [])
-    out_schema = f"{key} string, start timestamp, {value} double"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        s = pdf.set_index(ts_col)[value]
-        s.index = pd.DatetimeIndex(s.index)
-        agg = pdf[agg_func_col].iloc[0]
-        res = K.harmonize(s, agg, freq_seconds)
-        out = res.reset_index()
-        out.columns = ["start", value]
-        out[key] = pdf[key].iloc[0]
-        return out[[key, "start", value]]
-
-    cols = group_cols + [ts_col, value, agg_func_col]
-    return df.select(*[c for c in dict.fromkeys(cols)]).groupBy(*group_cols).applyInPandas(
-        fn, out_schema
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -438,16 +400,19 @@ def upsample(
     Plan shape: one hash exchange on the series key (the lead window), then
     a slot explode — identical to the formula engine's `_upsample`
     (plans/formula.py), which this operator mirrors; no range join, no
-    BroadcastNestedLoopJoin."""
-    from pyspark.sql import Window as W
+    BroadcastNestedLoopJoin.
 
+    Duplicate (key, start) rows are tolerated and produce duplicate output
+    rows: ties are ordered by value, so every duplicate but the largest
+    claims just its own slot and the largest claims the span to the next
+    point, whatever the input's partition order."""
     assert from_seconds % to_seconds == 0
     src = points.select(
         F.col(key).alias("__k"),
         F.unix_timestamp(F.col(start_col)).alias("__s"),
         F.col(value).alias("__v"),
     )
-    nxt = F.lead("__s").over(W.partitionBy("__k").orderBy("__s"))
+    nxt = F.lead("__s").over(W.partitionBy("__k").orderBy("__s", "__v"))
     # exclusive claim end, clamped to at least one fine slot: a duplicate
     # (key, start) in the input makes lead(__s) == __s, which would send
     # F.sequence a negative span (runtime error) and n_slots to 0 (division
@@ -579,10 +544,11 @@ def rollup_exact_chunked(
     analog for hot series. Group key = (key, session, chunk) where chunk =
     floor(ts / (chunk_windows * freq)); each chunk also receives a one-point
     overlap (the previous chunk's last row) so the 1s interpolation across
-    the boundary is identical to the unchunked replay. Kernels emit
-    per-window (count, sum) partials; a native merge re-gates completeness
-    (count == freq) after summation — bit-identical results, bounded memory:
-    a chunk's 1s grid never exceeds chunk_windows * freq seconds (+gap).
+    the boundary is identical to replaying the whole series at once.
+    Kernels emit per-window (count, sum) partials; a native merge re-gates
+    completeness (count == freq) after summation — the same windows, values
+    equal up to float addition order, and bounded memory: a chunk's 1s grid
+    never exceeds chunk_windows * freq seconds (+gap).
 
     Negative-diff dropping (R1 step 1) runs as a native window op BEFORE
     chunking, because a dropped row changes its neighbors' interpolation —

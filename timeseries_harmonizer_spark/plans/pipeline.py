@@ -4,38 +4,24 @@ scan -> extract -> dedup -> enrich (broadcast registry) -> unit convert ->
 sessionize -> clean -> rollup -> shape points -> write tier payloads.
 
 Stage boundaries are Catalyst's; the one explicit exchange is prepare's url
-repartition, which every per-series stage downstream reuses, and
-sessionization bounds per-group state for the Arrow stages.
+repartition, which every per-series stage downstream reuses. Each
+fixed-width tier has one rollup path, the closed-form ``rollup_native``
+pass; there is no Arrow stage on the points path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from timeseries_harmonizer_spark.config import (
-    EXACT_CHUNK_WINDOWS,
-    N_BUCKETS,
-    TIERS,
-    VALUE_ROUND,
-    TierConfig,
-)
+from timeseries_harmonizer_spark.config import N_BUCKETS, TIERS, VALUE_ROUND, TierConfig
 from timeseries_harmonizer_spark.functions.extract import extract_text
 from timeseries_harmonizer_spark.operators.cleaning import unit_convert
 from timeseries_harmonizer_spark.operators.dedup import keep_last_sorted
-from timeseries_harmonizer_spark.operators.rollup import (
-    continuous_aggregate,
-    rollup_exact_chunked,
-    rollup_native,
-)
+from timeseries_harmonizer_spark.operators.rollup import continuous_aggregate, rollup_native
 from timeseries_harmonizer_spark.operators.sessionize import sessionize
 
 
-def prepare(
-    pages: DataFrame,
-    registry: DataFrame,
-    tier: TierConfig,
-    use_extracted_text: bool = True,
-) -> DataFrame:
+def prepare(pages: DataFrame, registry: DataFrame, tier: TierConfig) -> DataFrame:
     """scan -> extract -> prune -> ONE shuffle -> dedup -> enrich ->
     convert -> sessionize.
 
@@ -48,9 +34,7 @@ def prepare(
     partitioning via the subset rule — zero additional exchanges through
     rollup and payload aggregation.
     """
-    df = pages
-    if use_extracted_text:
-        df = df.withColumn("text", extract_text(F.col("html")))
+    df = pages.withColumn("text", extract_text(F.col("html")))
     df = df.withColumn("value", F.length("text").cast("double"))
     df = df.select("url", "warc_ts", "ingest_pos", "value", "lang")
     # the one exchange. r6: its WIDTH follows the session's shuffle-partition
@@ -71,44 +55,12 @@ def prepare(
     return df
 
 
-def rollup_points(
-    prepared: DataFrame,
-    tier: TierConfig,
-    exact: bool = False,
-) -> DataFrame:
+def rollup_points(prepared: DataFrame, tier: TierConfig) -> DataFrame:
     """Per-series rollup at the tier frequency, honoring each series'
     aggregation function: one ``rollup_native`` pass (closed form, see
-    operators.rollup); exact=True replays SUM/AVG on the reference-replay
-    Arrow path instead and keeps LAST native.
-
-    The exact path is always *chunked* (rollup_exact_chunked): Arrow group
-    memory is bounded by chunk span even for gapless series — the 1d tier has
-    gap_seconds=None, so without chunking one hot url would materialize its
-    entire history as a single 1s grid (the reference's memory hazard at
-    lib2/__init__.py:30). SUM/AVG windows that pass the completeness gate
+    operators.rollup). SUM/AVG windows that pass the completeness gate
     always contain real observations -> is_real=True; LAST derives is_real
     per window (LOCF fills are False)."""
-    if exact:
-        sums = rollup_exact_chunked(
-            prepared.where(F.col("agg_func") == "SUM"),
-            agg_func="SUM",
-            freq_seconds=tier.seconds,
-            session_col="session_id",
-            chunk_windows=EXACT_CHUNK_WINDOWS,
-        ).withColumn("is_real", F.lit(True))
-        avgs = rollup_exact_chunked(
-            prepared.where(F.col("agg_func") == "AVG"),
-            agg_func="AVG",
-            freq_seconds=tier.seconds,
-            session_col="session_id",
-            chunk_windows=EXACT_CHUNK_WINDOWS,
-        ).withColumn("is_real", F.lit(True))
-        lasts = rollup_native(
-            prepared.where(F.col("agg_func") == "LAST"),
-            freq_seconds=tier.seconds,
-            session_col="session_id",
-        )
-        return sums.unionByName(avgs).unionByName(lasts)
     return rollup_native(prepared, freq_seconds=tier.seconds, session_col="session_id")
 
 
@@ -148,9 +100,9 @@ def run_tier(
     pages: DataFrame,
     registry: DataFrame,
     tier_name: str = "1h",
-    exact: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full plan for one tier: returns (points, tier_payloads).
+    """Full plan for one tier: returns (points, tier_payloads). The points
+    are ``shape_points`` over the one ``rollup_points`` pass.
 
     Each returned frame is its own lineage from the scan: on the points
     path ``prepared`` has one consumer, the single rollup pass, so nothing
@@ -166,7 +118,7 @@ def run_tier(
             "rollup_native_last, or the formula engine."
         )
     prepared = prepare(pages, registry, tier)
-    pts = shape_points(rollup_points(prepared, tier, exact=exact), registry, tier)
+    pts = shape_points(rollup_points(prepared, tier), registry, tier)
     return pts, tier_payloads(prepared, tier)
 
 
