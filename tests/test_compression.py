@@ -1,24 +1,75 @@
-"""Gorilla XOR + delta-of-delta round-trip: property-based (hypothesis) and
-through the Spark payload stage (FIXTURES.md §E)."""
+"""Codec v2 round-trips: property-based (hypothesis) over decimal and
+fallback values and grouped splits, the decoders' input checks, and the
+Spark payload stage (FIXTURES.md §E)."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from timeseries_harmonizer_spark.functions import compression as C
+
+XOR_SCALE = 0xFF
 
 finite_or_weird = st.one_of(
     st.floats(allow_nan=True, allow_infinity=True, width=64),
     st.sampled_from([0.0, -0.0, 5e-324, -5e-324, 1e308, -1e308, float("nan")]),
 )
+# values with at most E_MAX decimals: q / 10**e, as round(x, e) makes them
+decimal_series = st.integers(min_value=0, max_value=C.E_MAX).flatmap(
+    lambda e: st.tuples(
+        st.just(e),
+        st.lists(st.integers(min_value=-(10**12), max_value=10**12), max_size=300),
+    )
+)
+
+
+def _bits(v: np.ndarray) -> bytes:
+    return np.asarray(v, dtype=np.float64).view(np.uint64).tobytes()
+
+
+def _scale(blob: bytes) -> int:
+    return blob[3]
+
+
+def _concat(blobs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    return np.frombuffer(b"".join(blobs), dtype=np.uint8), offsets
 
 
 @given(st.lists(finite_or_weird, max_size=300))
 @settings(max_examples=150, deadline=None)
 def test_float_roundtrip_bitexact(vals):
     v = np.array(vals, dtype=np.float64)
-    back = C.decode_floats(C.encode_floats(v))
-    assert v.view(np.uint64).tobytes() == back.view(np.uint64).tobytes()
+    blob = C.encode_floats(v)
+    assert _bits(C.decode_floats(blob)) == _bits(v)
+    if np.isnan(v).any() or np.isinf(v).any() or (np.signbit(v) & (v == 0)).any():
+        assert _scale(blob) == XOR_SCALE
+
+
+@given(decimal_series)
+@settings(max_examples=150, deadline=None)
+def test_decimal_roundtrip_bitexact(case):
+    e, qs = case
+    v = np.array([q / 10**e for q in qs], dtype=np.float64)
+    blob = C.encode_floats(v)
+    assert _bits(C.decode_floats(blob)) == _bits(v)
+    # stored as scaled integers, at the smallest exponent that fits
+    assert _scale(blob) <= e
+    s = _scale(blob)
+    assert _bits(np.rint(v * 10.0**s) / 10.0**s) == _bits(v)
+    if s:
+        s1 = s - 1
+        assert _bits(np.rint(v * 10.0**s1) / 10.0**s1) != _bits(v)
+
+
+def test_non_decimal_values_fall_back_to_xor():
+    for vals in ([0.1, 1 / 3], [5e-324, 1.0], [1e-7], [float("inf")], [-0.0, 1.0]):
+        v = np.array(vals)
+        blob = C.encode_floats(v)
+        assert _scale(blob) == XOR_SCALE, vals
+        assert _bits(C.decode_floats(blob)) == _bits(v)
 
 
 @given(
@@ -33,21 +84,31 @@ def test_ts_roundtrip(ts):
     assert np.array_equal(t, back)
 
 
+def test_ts_roundtrip_int64_extremes():
+    t = np.array([2**63 - 1, -(2**63), 0, 2**62, -(2**62), 2**63 - 1], dtype=np.int64)
+    assert np.array_equal(C.decode_timestamps(C.encode_timestamps(t)), t)
+
+
 @given(
-    st.lists(finite_or_weird, min_size=1, max_size=200),
+    st.lists(
+        st.one_of(
+            finite_or_weird,
+            st.integers(min_value=-(10**9), max_value=10**9).map(lambda q: q / 1e5),
+        ),
+        min_size=1,
+        max_size=200,
+    ),
     st.data(),
 )
 @settings(max_examples=100, deadline=None)
 def test_grouped_encoders_byte_identical(vals, data):
-    """encode_*_grouped must produce EXACTLY the bytes of the per-group
-    scalar encoders for any contiguous group split — the payload stage's
-    batch vectorization can never change the storage format."""
+    """For any split into contiguous groups (some decimal, some not), each
+    grouped blob is byte-identical to the one-group encoder's, and the
+    grouped decoders return every group's points in order."""
     v = np.array(vals, dtype=np.float64)
     n = len(v)
-    k = data.draw(st.integers(min_value=1, max_value=n))
     cuts = sorted(data.draw(
-        st.lists(st.integers(min_value=1, max_value=max(n - 1, 1)),
-                 max_size=k, unique=True)
+        st.lists(st.integers(min_value=1, max_value=n - 1), unique=True)
     )) if n > 1 else []
     starts = np.array([0] + cuts, dtype=np.int64)
     ends = np.append(starts[1:], n)
@@ -59,13 +120,59 @@ def test_grouped_encoders_byte_identical(vals, data):
     for i, (a, b) in enumerate(zip(starts, ends)):
         assert fg[i] == C.encode_floats(v[a:b])
         assert tg[i] == C.encode_timestamps(t[a:b])
+    got_v, counts_v = C.decode_floats_grouped(*_concat(fg))
+    got_t, counts_t = C.decode_timestamps_grouped(*_concat(tg))
+    assert _bits(got_v) == _bits(v)
+    assert np.array_equal(got_t, t)
+    assert np.array_equal(counts_v, ends - starts)
+    assert np.array_equal(counts_t, ends - starts)
+
+
+def test_decoders_reject_foreign_and_broken_blobs():
+    t = np.arange(0, 3600, 60, dtype=np.int64) + 1704067200
+    v = np.round(np.linspace(1.0, 2.0, len(t)), 5)
+    ts_blob, val_blob = C.encode_timestamps(t), C.encode_floats(v)
+    # v1 blobs: their magics name the fix
+    for v1 in (b"GX1" + np.uint32(1).tobytes() + b"\x08" + bytes(8),
+               b"DD1" + np.uint32(1).tobytes() + b"\x01\x05"):
+        for decode in (C.decode_floats, C.decode_timestamps):
+            with pytest.raises(ValueError, match="rerun the compress stage"):
+                decode(v1)
+    # swapped ts/value blobs
+    with pytest.raises(ValueError, match="magic"):
+        C.decode_floats(ts_blob)
+    with pytest.raises(ValueError, match="magic"):
+        C.decode_timestamps(val_blob)
+    # truncated: at every cut, header included
+    for blob, decode in ((ts_blob, C.decode_timestamps), (val_blob, C.decode_floats)):
+        for cut in range(len(blob)):
+            with pytest.raises(ValueError):
+                decode(blob[:cut])
+        with pytest.raises(ValueError, match="truncated or corrupt"):
+            decode(blob + b"\x00")
+    # a point count (2**31 as a varint) larger than the bitmap that follows
+    with pytest.raises(ValueError, match="truncated or corrupt"):
+        C.decode_timestamps(b"DD2" + b"\x80\x80\x80\x80\x08" + bytes(16))
+    # a point count whose varint never ends
+    with pytest.raises(ValueError, match="varint"):
+        C.decode_timestamps(b"DD2" + b"\xff" * 8)
+    # a value blob with an unknown scale byte
+    bad_scale = val_blob[:3] + bytes([C.E_MAX + 1]) + val_blob[4:]
+    with pytest.raises(ValueError, match="scale"):
+        C.decode_floats(bad_scale)
 
 
 def test_compression_is_effective():
+    """A regular 1m day of round(x, 5) values: a ramp, and hourly levels
+    held for 60 minutes (a 1h-cadence series at the 1m tier)."""
     t = np.arange(0, 86400, 60, dtype=np.int64) + 1704067200
-    v = np.round(np.cumsum(np.ones(len(t))) * 0.25, 5)
-    assert len(C.encode_timestamps(t)) < 0.25 * 8 * len(t)
-    assert len(C.encode_floats(v)) < 0.8 * 8 * len(v)
+    rng = np.random.default_rng(5)
+    ramp = np.round(np.cumsum(np.ones(len(t))) * 0.25, 5)
+    held = np.repeat(np.round(rng.normal(100, 5, len(t) // 60), 5), 60)
+    ts_bytes = len(C.encode_timestamps(t))
+    assert ts_bytes < 0.2 * len(t)
+    for v in (ramp, held):
+        assert (ts_bytes + len(C.encode_floats(v))) / len(t) < 1.5
 
 
 def test_spark_payload_roundtrip(spark):
@@ -85,17 +192,27 @@ def test_spark_payload_roundtrip(spark):
             "value": np.round(rng.normal(100, 5, n), 5),
         }
     )
+    pdf.loc[7, "value"] = np.nan  # one chunk falls back to XOR words
     df = spark.createDataFrame(pdf)
-    payloads = compress_points(df, "1m")
-    pay_pdf = payloads.toPandas()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    try:
+        # small batches split (url, day) groups across batch boundaries
+        spark.conf.set(key, "250")
+        pay_pdf = compress_points(df, "1m").toPandas()
+        back = decompress_points(compress_points(df, "1m")).toPandas()
+    finally:
+        spark.conf.set(key, before)
     assert (pay_pdf["n"] >= 1).all()
-    back = decompress_points(payloads).toPandas()
+    assert not pay_pdf.duplicated(["url", "chunk_start"]).any()
+    assert pay_pdf["n"].sum() == n
     a = pdf.sort_values(["url", "start"]).reset_index(drop=True)
     b = back.sort_values(["url", "start"]).reset_index(drop=True)
     assert len(a) == len(b)
-    assert (a["value"].to_numpy() == b["value"].to_numpy()).all()
+    assert _bits(a["value"].to_numpy()) == _bits(b["value"].to_numpy())
     assert (a["start"].to_numpy() == b["start"].to_numpy()).all()
+    assert (a["url"].to_numpy() == b["url"].to_numpy()).all()
     # blobs actually compress
     raw_bytes = 16 * len(pdf)
     blob_bytes = int(pay_pdf["ts_blob"].map(len).sum() + pay_pdf["val_blob"].map(len).sum())
-    assert blob_bytes < 0.7 * raw_bytes
+    assert blob_bytes < 0.5 * raw_bytes

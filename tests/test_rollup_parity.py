@@ -13,9 +13,57 @@ from timeseries_harmonizer_spark.config import TIERS
 from timeseries_harmonizer_spark.plans import pipeline
 
 
+GAPLESS_SUM_URL = "https://gapless.example.com/sum"
+
+
 @pytest.fixture(scope="module")
-def inputs_pdf(pages, reg):
-    return pages.toPandas(), reg.toPandas()
+def parity_inputs(spark, pages, reg):
+    """The shared fixture plus one gapless SUM series: a meter read every
+    30 minutes for three days, so its second day is a complete 1d window.
+    The shared fixture has no SUM series with a complete 1d window, so
+    without it the 1d SUM cases compare nothing."""
+    n = 3 * 48
+    texts = ["w" * (5 + i // 4) for i in range(n)]
+    extra = pd.DataFrame(
+        {
+            "url": GAPLESS_SUM_URL,
+            "warc_ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(n) * 1800, unit="s"),
+            "html": [
+                f"<html><head><title>t</title></head><body><p>{t}</p></body></html>".encode()
+                for t in texts
+            ],
+            "text": texts,
+            "lang": "en",
+            "ingest_pos": np.arange(n, dtype=np.int64),
+            "value": [float(len(t)) for t in texts],
+            "url_idx": -1,
+        }
+    )
+    extra_reg = pd.DataFrame(
+        {
+            "url": [GAPLESS_SUM_URL],
+            "series_hash": ["gapless"],
+            "property": ["EnergyConsumptionGridElectricity"],
+            "agg_func": ["SUM"],
+            "raw_conv_ratio": [1.0],
+            "raw_conv_offset": [0.0],
+            "harm_conv_ratio": [1.0],
+            "harm_conv_offset": [0.0],
+            "max_power": [10000.0],
+        }
+    )
+    all_pages = pages.unionByName(spark.createDataFrame(extra, schema=pages.schema))
+    all_reg = reg.unionByName(spark.createDataFrame(extra_reg, schema=reg.schema))
+    return all_pages, all_reg, all_pages.toPandas(), all_reg.toPandas()
+
+
+def _each_agg(reg_pdf: pd.DataFrame, expected: pd.DataFrame):
+    """(agg, the expected rows of that agg's urls), asserting each is
+    non-empty so no case passes by comparing nothing."""
+    for agg, urls in reg_pdf.groupby("agg_func")["url"]:
+        want = expected[expected["url"].isin(urls)]
+        assert len(want), f"no expected {agg} rows"
+        yield agg, want
 
 
 def _compare(got: pd.DataFrame, expected: pd.DataFrame, tol=2e-5):
@@ -35,25 +83,26 @@ def _compare(got: pd.DataFrame, expected: pd.DataFrame, tol=2e-5):
 
 
 @pytest.mark.parametrize("tier_name", ["1m", "1h", "1d"])
-def test_native_rollup_matches_oracle(spark, pages, reg, inputs_pdf, tier_name):
+def test_native_rollup_matches_oracle(spark, parity_inputs, tier_name):
     tier = TIERS[tier_name]
+    pages, reg, pages_pdf, reg_pdf = parity_inputs
     prepared = pipeline.prepare(pages, reg, tier)
     pts = pipeline.rollup_points(prepared, tier)
     got = (
         pts.select("url", "start", F.round("value", 5).alias("value"))
         .toPandas()
     )
-    pages_pdf, reg_pdf = inputs_pdf
     expected = oracle.harmonize_pages(
         pages_pdf, reg_pdf, tier.seconds, tier.gap_seconds
     )
+    assert sorted(agg for agg, _ in _each_agg(reg_pdf, expected)) == ["AVG", "LAST", "SUM"]
     _compare(got, expected)
 
 
 @pytest.mark.parametrize(
     ("tier_name", "chunk_windows"), [("1h", 3), ("1h", 24), ("1d", 3), ("1d", 24)]
 )
-def test_exact_chunked_matches_oracle(spark, pages, reg, inputs_pdf, tier_name, chunk_windows):
+def test_exact_chunked_matches_oracle(spark, parity_inputs, tier_name, chunk_windows):
     """The Arrow replay with time-chunked groups matches the oracle for
     SUM and AVG series, with small chunks that put many windows on a chunk
     edge and with the default span. The 1d tier has gap_seconds=None (one
@@ -63,11 +112,13 @@ def test_exact_chunked_matches_oracle(spark, pages, reg, inputs_pdf, tier_name, 
     from timeseries_harmonizer_spark.operators.rollup import rollup_exact_chunked
 
     tier = TIERS[tier_name]
+    pages, reg, pages_pdf, reg_pdf = parity_inputs
     prepared = pipeline.prepare(pages, reg, tier)
-    pages_pdf, reg_pdf = inputs_pdf
     expected = oracle.harmonize_pages(pages_pdf, reg_pdf, tier.seconds, tier.gap_seconds)
-    compared = 0
-    for agg in ("SUM", "AVG"):
+    compared = set()
+    for agg, want in _each_agg(reg_pdf, expected):
+        if agg == "LAST":
+            continue
         pts = rollup_exact_chunked(
             prepared.where(F.col("agg_func") == agg),
             agg_func=agg,
@@ -76,13 +127,9 @@ def test_exact_chunked_matches_oracle(spark, pages, reg, inputs_pdf, tier_name, 
             chunk_windows=chunk_windows,
         )
         got = pts.select("url", "start", F.round("value", 5).alias("value")).toPandas()
-        urls = reg_pdf.loc[reg_pdf["agg_func"] == agg, "url"]
-        want = expected[expected["url"].isin(urls)]
         _compare(got, want, tol=1e-9)
-        compared += len(want)
-    # the fixture's SUM series have no complete day: at 1d only AVG rows
-    # are compared, and SUM must emit none
-    assert compared > 0
+        compared.add(agg)
+    assert compared == {"SUM", "AVG"}
 
 
 def test_twa_matches_numpy_trapezoid(spark):

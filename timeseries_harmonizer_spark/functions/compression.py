@@ -1,254 +1,343 @@
-"""Tier-payload compression: Gorilla-style XOR float encoding and
-delta-of-delta timestamp encoding, as vectorized numpy kernels inside
-Arrow-batched UDFs.
+"""Tier-payload compression (codec v2): one delta-of-delta integer
+container for timestamps and values, as vectorized numpy kernels that
+encode and decode whole Arrow batches of blobs at once.
 
-Public algorithms (Facebook Gorilla, VLDB'15: "Gorilla: A Fast, Scalable,
-In-Memory Time Series Database"). This implementation uses the XOR-of-
-consecutive-doubles idea with a *byte-aligned, columnar* container instead
-of the paper's bit-granular stream, trading a few % compression for fully
-vectorized encode AND decode (no per-point Python):
+Grounding: Facebook Gorilla (VLDB'15: "Gorilla: A Fast, Scalable, In-Memory
+Time Series Database") for delta-of-delta timestamps, its one-bit "same"
+case and XOR float words; ALP (SIGMOD'24: "ALP: Adaptive Lossless
+floating-Point Compression") for storing decimal doubles as exact scaled
+integers. The container is byte-aligned and columnar instead of a bit
+stream, so encode and decode are a few numpy passes per batch with no
+per-point Python.
 
-float blob   := [n:uint32le][ctrl:uint8*n][payload bytes]
-  ctrl[i]    := (trailing_zero_bytes << 4) | meaningful_bytes
-  xors       := v[i] ^ v[i-1] as uint64 (v[-1] := 0), so decode is a single
-                np.bitwise_xor prefix scan — NaN / ±0 / denormals round-trip
-                bit-exactly because everything is pure bit ops.
-  payload    := the meaningful_bytes of each xor (little-endian order,
-                trailing zero bytes stripped).
+blob       := [magic:3][scale:uint8, value blobs only][n:varint]
+              [bitmap:ceil(n/8)][lengths:ceil(k/2)][payload]
+  magic    := b"DD2" (timestamps) | b"DV2" (values)
+  n        := the point count as an unsigned LEB128 varint (7 bits per
+              byte, low group first, high bit set on all but the last
+              byte): one byte up to 127 points, two up to 16383
+  z        := the blob's n uint64 entries, k of them nonzero
+  bitmap   := bit i (least significant bit first) set iff z[i] != 0, so a
+              zero entry costs one bit and nothing else
+  lengths  := for each nonzero entry only, its byte count 1..8 as a
+              nibble (low nibble first; an odd k leaves the last high
+              nibble 0)
+  payload  := the low ``length`` bytes of each nonzero entry, little-endian
 
-ts blob      := [n:uint32le][nbytes:uint8*n][payload bytes]
-  dods       := zigzag(delta-of-delta of int64 epoch values); first two
-                entries store the raw first value and the first delta.
-  decode     := two np.cumsum passes.
+z of a timestamp blob (int64 epoch values, any unit):
+  zigzag delta-of-delta: the first value raw, then the first delta, then
+  t[i] - 2 t[i-1] + t[i-2]. A regular series is all zeros after two.
+z of a value blob with scale e in 0..E_MAX:
+  the same chain over the int64 q = v * 10**e, where e is the smallest
+  exponent for which q / 10**e reproduces every value of the blob bit for
+  bit. Values rounded to d <= E_MAX decimals are stored exactly at e <= d.
+z of a value blob with scale 0xFF (no e works: NaN, -0.0, inf,
+  non-decimal doubles):
+  u[i] ^ u[i-1] of the float64 bit patterns, u[-1] = 0. Decode is an XOR
+  prefix scan, so every bit pattern round-trips.
 
-Vectorization strategy: offsets come from cumsum of per-point byte counts;
-bytes are gathered/scattered per *length class* (<= 9 classes), never per
-point.
+The grouped encoders take contiguous groups that tile one array (one group
+per (series, chunk)) and return one blob per group; the scalar encoders
+are their one-group case. The grouped decoders take the concatenated blob
+bytes and their offsets (an Arrow binary column's buffers) and return the
+concatenated points and each blob's point count. Decoders raise
+``ValueError`` on a foreign or v1 magic and on a blob whose length
+disagrees with its header. v1 blobs (b"GX1"/b"DD1") are not decoded: every
+blob is derived data, and rerunning the compress stage rewrites it as v2.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-_MAGIC_F = b"GX1"
-_MAGIC_T = b"DD1"
+_MAGIC_T = b"DD2"
+_MAGIC_F = b"DV2"
+_MAGIC_V1 = (b"GX1", b"DD1")
+E_MAX = 6
+_XOR = 0xFF
+_VARINT_MAX = 5  # bytes of a varint n: 35 bits
+_POW10 = np.array([10.0**e for e in range(E_MAX + 1)])
+# an entry's byte count is how many of these it is >= to
+_BYTE_STEPS = np.array([1 << (8 * i) for i in range(8)], dtype=np.uint64)
 
 
-def _meaningful_bytes(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Per uint64: (trailing_zero_bytes, meaningful_bytes). x==0 -> (0,0)."""
-    b = x.view(np.uint64).reshape(-1, 1).view(np.uint8).reshape(-1, 8)  # LE bytes
-    nz = b != 0
-    any_nz = nz.any(axis=1)
-    first = np.where(any_nz, nz.argmax(axis=1), 0).astype(np.uint8)  # trailing zero bytes (LE)
-    last = np.where(any_nz, 7 - nz[:, ::-1].argmax(axis=1), 0)
-    mb = np.where(any_nz, last - first + 1, 0).astype(np.uint8)
-    return first, mb
+def _exclusive_cumsum(x: np.ndarray) -> np.ndarray:
+    out = np.zeros(len(x) + 1, dtype=np.int64)
+    np.cumsum(x, out=out[1:], dtype=np.int64)
+    return out
 
 
-def encode_floats(values: np.ndarray) -> bytes:
-    v = np.ascontiguousarray(values, dtype=np.float64)
-    n = len(v)
-    if n == 0:
-        return _MAGIC_F + np.uint32(0).tobytes()
-    u = v.view(np.uint64)
-    xors = np.empty(n, dtype=np.uint64)
-    xors[0] = u[0]
-    np.bitwise_xor(u[1:], u[:-1], out=xors[1:])
-    tzb, mb = _meaningful_bytes(xors)
-    ctrl = ((tzb << 4) | mb).astype(np.uint8)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(mb, out=offs[1:])
-    payload = np.zeros(int(offs[-1]), dtype=np.uint8)
-    lebytes = xors.reshape(-1, 1).view(np.uint8).reshape(-1, 8)
-    for L in range(1, 9):
-        sel = np.nonzero(mb == L)[0]
-        if len(sel) == 0:
-            continue
-        starts = offs[sel]
-        rows = lebytes[sel]
-        src_col = tzb[sel].astype(np.int64)
-        idx = starts[:, None] + np.arange(L)
-        payload[idx] = rows[np.arange(len(sel))[:, None], src_col[:, None] + np.arange(L)]
-    return _MAGIC_F + np.uint32(n).tobytes() + ctrl.tobytes() + payload.tobytes()
+def _spans(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """The indices start .. start + count - 1 of every span, concatenated."""
+    return np.repeat(starts - _exclusive_cumsum(counts)[:-1], counts) + np.arange(
+        int(counts.sum())
+    )
 
 
-def decode_floats(blob: bytes) -> np.ndarray:
-    assert blob[:3] == _MAGIC_F, "not a GX1 float blob"
-    n = int(np.frombuffer(blob, dtype=np.uint32, count=1, offset=3)[0])
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-    ctrl = np.frombuffer(blob, dtype=np.uint8, count=n, offset=7)
-    tzb = (ctrl >> 4).astype(np.int64)
-    mb = (ctrl & 0x0F).astype(np.int64)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(mb, out=offs[1:])
-    payload = np.frombuffer(blob, dtype=np.uint8, offset=7 + n)
-    lebytes = np.zeros((n, 8), dtype=np.uint8)
-    for L in range(1, 9):
-        sel = np.nonzero(mb == L)[0]
-        if len(sel) == 0:
-            continue
-        idx = offs[sel][:, None] + np.arange(L)
-        cols = tzb[sel][:, None] + np.arange(L)
-        lebytes[sel[:, None], cols] = payload[idx]
-    xors = lebytes.reshape(-1).view(np.uint64)
-    u = np.bitwise_xor.accumulate(xors)
-    return u.view(np.float64).copy()
+def _group_sums(x: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Per-group sums of ``x``, whose groups of ``counts`` tile it."""
+    c = _exclusive_cumsum(x)
+    b = _exclusive_cumsum(counts)
+    return c[b[1:]] - c[b[:-1]]
 
 
 def _zigzag(x: np.ndarray) -> np.ndarray:
-    with np.errstate(over="ignore"):
-        return ((x.astype(np.uint64) << np.uint64(1)) ^ (x >> 63).view(np.uint64))
+    return (x.astype(np.uint64) << np.uint64(1)) ^ (x >> 63).view(np.uint64)
 
 
 def _unzigzag(u: np.ndarray) -> np.ndarray:
-    x = u.view(np.uint64)
-    return ((x >> 1).astype(np.int64)) ^ -(x & 1).astype(np.int64)
+    return (u >> np.uint64(1)).astype(np.int64) ^ -(u & np.uint64(1)).astype(np.int64)
 
 
-def encode_timestamps(ts: np.ndarray) -> bytes:
-    """ts: int64 epoch values (any unit). Delta-of-delta + zigzag, byte-
-    aligned columnar container."""
-    t = np.ascontiguousarray(ts, dtype=np.int64)
-    n = len(t)
-    if n == 0:
-        return _MAGIC_T + np.uint32(0).tobytes()
-    dod = np.empty(n, dtype=np.int64)
-    dod[0] = t[0]
-    if n > 1:
-        d = np.diff(t)
-        dod[1] = d[0]
-        if n > 2:
-            dod[2:] = np.diff(d)
-    z = _zigzag(dod)
-    tzb, mb = _meaningful_bytes(z)
-    # timestamps: no trailing-zero-byte trick (values are small already);
-    # store total significant bytes from byte 0
-    nbytes = (tzb + mb).astype(np.uint8)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(nbytes, out=offs[1:])
-    payload = np.zeros(int(offs[-1]), dtype=np.uint8)
-    lebytes = z.reshape(-1, 1).view(np.uint8).reshape(-1, 8)
-    for L in range(1, 9):
-        sel = np.nonzero(nbytes == L)[0]
-        if len(sel) == 0:
-            continue
-        idx = offs[sel][:, None] + np.arange(L)
-        payload[idx] = lebytes[sel][:, :L]
-    return _MAGIC_T + np.uint32(n).tobytes() + nbytes.tobytes() + payload.tobytes()
+def _nonempty(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, counts) of the groups that hold points."""
+    starts = _exclusive_cumsum(counts)[:-1]
+    keep = counts > 0
+    return starts[keep], counts[keep]
 
 
-def encode_floats_grouped(
-    values: np.ndarray, starts: np.ndarray, ends: np.ndarray
+def _dod(x: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Delta-of-delta of int64 ``x``, restarting at each group with the
+    first value raw, then the first delta. int64 arithmetic wraps, and
+    ``_undod`` wraps back."""
+    starts, counts = _nonempty(counts)
+    dod = np.empty(len(x), dtype=np.int64)
+    dod[2:] = x[2:] - 2 * x[1:-1] + x[:-2]
+    second = (starts + 1)[counts > 1]
+    dod[second] = x[second] - x[second - 1]
+    dod[starts] = x[starts]
+    return dod
+
+
+def _undod(dod: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    starts, counts = _nonempty(counts)
+    x = dod.copy()
+    x[starts] = 0
+    for _ in range(2):  # the deltas, then the values less the first
+        c = np.cumsum(x)
+        x = c - np.repeat(c[starts] - x[starts], counts)
+    return x + np.repeat(dod[starts], counts)
+
+
+def _xor_words(u: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    starts, _ = _nonempty(counts)
+    x = np.empty_like(u)
+    x[:1] = u[:1]
+    np.bitwise_xor(u[1:], u[:-1], out=x[1:])
+    x[starts] = u[starts]
+    return x
+
+
+def _unxor(x: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    starts, counts = _nonempty(counts)
+    a = np.bitwise_xor.accumulate(x)
+    return a ^ np.repeat(a[starts] ^ x[starts], counts)
+
+
+def _scales(v: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(scale per group, q per value): the smallest e <= E_MAX at which
+    every value of the group is q / 10**e bit for bit, else _XOR. Each
+    pass tests only the groups no smaller e fitted."""
+    scale = np.full(len(counts), _XOR, dtype=np.uint8)
+    q = np.zeros(len(v), dtype=np.int64)
+    bits = v.view(np.uint64)
+    starts = _exclusive_cumsum(counts)[:-1]
+    todo = np.arange(len(counts))
+    for e in range(E_MAX + 1):
+        n = counts[todo]
+        idx = _spans(starts[todo], n)
+        with np.errstate(invalid="ignore", over="ignore"):
+            qf = np.rint(v[idx] * _POW10[e])
+            ok = np.abs(qf) < 2.0**63  # also False for NaN and inf
+            qe = np.where(ok, qf, 0.0).astype(np.int64)
+        ok &= (qe / _POW10[e]).view(np.uint64) == bits[idx]
+        fit = _group_sums(~ok, n) == 0
+        scale[todo[fit]] = e
+        take = np.repeat(fit, n)
+        q[idx[take]] = qe[take]
+        todo = todo[~fit]
+        if not len(todo):
+            break
+    return scale, q
+
+
+def _head(
+    magic: bytes, counts: np.ndarray, *extra: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(every group's header concatenated, header length per group): the
+    magic, one byte per ``extra``, then n as a varint."""
+    g = len(counts)
+    digit = np.arange(_VARINT_MAX)
+    n_len = 1 + (counts[:, None] >> (7 * digit[1:]) > 0).sum(axis=1)
+    varint = (counts[:, None] >> (7 * digit)) & 0x7F | (digit < n_len[:, None] - 1) << 7
+    fixed = [np.broadcast_to(np.frombuffer(magic, dtype=np.uint8), (g, 3))]
+    fixed += [np.asarray(x, dtype=np.uint8).reshape(g, 1) for x in extra]
+    rows = np.hstack(fixed + [varint.astype(np.uint8)])
+    width = 3 + len(extra) + n_len
+    return rows[np.arange(rows.shape[1]) < width[:, None]], width
+
+
+def _pack(
+    z: np.ndarray, counts: np.ndarray, head: tuple[np.ndarray, np.ndarray]
 ) -> list[bytes]:
-    """Encode MANY contiguous groups of one value array in a single
-    vectorized pass; returns one blob per group, byte-identical to
-    ``encode_floats(values[a:b])``. The XOR chain restarts at each group
-    start (first value raw), so the whole-batch bit stream is computed once
-    and each group's blob is a pure slice — this is what keeps the payload
-    stage at ~2 numpy passes per Arrow batch instead of ~2 encoder calls
-    per (series, day) group."""
-    v = np.ascontiguousarray(values, dtype=np.float64)
-    n = len(v)
-    if n == 0:
-        return []
-    u = v.view(np.uint64)
-    xors = np.empty(n, dtype=np.uint64)
-    xors[0] = u[0]
-    np.bitwise_xor(u[1:], u[:-1], out=xors[1:])
-    xors[starts] = u[starts]  # each group's first value is stored raw
-    tzb, mb = _meaningful_bytes(xors)
-    ctrl = ((tzb << 4) | mb).astype(np.uint8)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(mb, out=offs[1:])
-    payload = np.zeros(int(offs[-1]), dtype=np.uint8)
-    lebytes = xors.reshape(-1, 1).view(np.uint8).reshape(-1, 8)
-    for L in range(1, 9):
-        sel = np.nonzero(mb == L)[0]
-        if len(sel) == 0:
-            continue
-        sts = offs[sel]
-        rows = lebytes[sel]
-        src_col = tzb[sel].astype(np.int64)
-        idx = sts[:, None] + np.arange(L)
-        payload[idx] = rows[np.arange(len(sel))[:, None], src_col[:, None] + np.arange(L)]
-    ctrl_b, payload_b = ctrl.tobytes(), payload.tobytes()
-    return [
-        _MAGIC_F
-        + np.uint32(b - a).tobytes()
-        + ctrl_b[a:b]
-        + payload_b[offs[a]:offs[b]]
-        for a, b in zip(starts, ends)
+    """One container per group of ``counts`` (which tile ``z``): its
+    header from ``head`` (as ``_head`` returns it), then its bitmap, length
+    nibbles and payload."""
+    nz = z != 0
+    words = z[nz]
+    lens = np.searchsorted(_BYTE_STEPS, words, side="right").astype(np.uint8)
+    k = _group_sums(nz, counts)
+    bm, nb = (counts + 7) // 8, (k + 1) // 2
+    bits = np.zeros(int(bm.sum()) * 8, dtype=bool)
+    bits[_spans(_exclusive_cumsum(bm)[:-1] * 8, counts)[nz]] = True
+    nib = np.zeros(int(nb.sum()) * 2, dtype=np.uint8)
+    nib[_spans(_exclusive_cumsum(nb)[:-1] * 2, k)] = lens
+    le = words.astype("<u8").view(np.uint8).reshape(-1, 8)
+    sections = [  # (every group's bytes concatenated, bytes per group)
+        head,
+        (np.packbits(bits, bitorder="little"), bm),
+        (nib[0::2] | (nib[1::2] << 4), nb),
+        (le[np.arange(8) < lens[:, None]], _group_sums(lens, k)),
     ]
+    off = _exclusive_cumsum(sum(size for _, size in sections))
+    buf = np.empty(int(off[-1]), dtype=np.uint8)
+    at = off[:-1].copy()
+    for data, size in sections:
+        buf[_spans(at, size)] = data
+        at += size
+    out, o = buf.tobytes(), off.tolist()
+    return [out[a:b] for a, b in zip(o[:-1], o[1:])]
+
+
+def _unpack(
+    buf: np.ndarray, offsets: np.ndarray, magic: bytes, extra: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(z of every blob concatenated, n per blob, each blob's magic and
+    ``extra`` header bytes) of the blobs ``buf[offsets[i]:offsets[i + 1]]``.
+    Every section is checked to fit before it is read, so a corrupt n
+    cannot allocate more than 8 entries per byte of input."""
+    offsets = np.asarray(offsets, dtype=np.int64)
+    start, size = offsets[:-1], np.diff(offsets)
+
+    def fits(used: np.ndarray, exact: bool = False) -> None:
+        bad = (size != used) if exact else (size < used)
+        if bad.any():
+            i = int(np.argmax(bad))
+            raise ValueError(
+                f"blob {i} has {size[i]} bytes but its header implies "
+                f"{'exactly' if exact else 'at least'} {used[i]}: truncated "
+                "or corrupt"
+            )
+
+    fixed = 3 + extra
+    fits(np.full(len(size), fixed + 1))
+    head = buf[start[:, None] + np.arange(fixed)]
+    wrong = (head[:, :3] != np.frombuffer(magic, dtype=np.uint8)).any(axis=1)
+    if wrong.any():
+        found = head[int(np.argmax(wrong)), :3].tobytes()
+        if found in _MAGIC_V1:
+            raise ValueError(
+                f"{found!r} is a v1 blob, which this codec does not decode; "
+                "rerun the compress stage to rewrite the table as v2"
+            )
+        raise ValueError(f"expected a {magic!r} blob, found magic {found!r}")
+    at = start[:, None] + fixed + np.arange(_VARINT_MAX)
+    varint = np.where(at < offsets[1:, None], buf[np.minimum(at, len(buf) - 1)], 0)
+    n_len = 1 + np.cumprod(varint >= 0x80, axis=1).sum(axis=1)
+    if (n_len > _VARINT_MAX).any():
+        raise ValueError("blob point count runs past its varint: corrupt")
+    h = fixed + n_len
+    fits(h)
+    digits = (varint & 0x7F).astype(np.int64) << (7 * np.arange(_VARINT_MAX))
+    counts = np.where(np.arange(_VARINT_MAX) < n_len[:, None], digits, 0).sum(axis=1)
+    bm = (counts + 7) // 8
+    fits(h + bm)
+    bits = np.unpackbits(buf[_spans(start + h, bm)], bitorder="little")
+    nz = bits[_spans(_exclusive_cumsum(bm)[:-1] * 8, counts)].astype(bool)
+    k = _group_sums(nz, counts)
+    nb = (k + 1) // 2
+    fits(h + bm + nb)
+    packed = buf[_spans(start + h + bm, nb)]
+    nib = np.empty(2 * len(packed), dtype=np.uint8)
+    nib[0::2], nib[1::2] = packed & 0x0F, packed >> 4
+    lens = nib[_spans(_exclusive_cumsum(nb)[:-1] * 2, k)]
+    if ((lens == 0) | (lens > 8)).any():
+        raise ValueError("blob holds a byte length outside 1..8: corrupt")
+    p = _group_sums(lens, k)
+    fits(h + bm + nb + p, exact=True)
+    le = np.zeros((len(lens), 8), dtype=np.uint8)
+    le[np.arange(8) < lens[:, None]] = buf[_spans(start + h + bm + nb, p)]
+    z = np.zeros(len(nz), dtype=np.uint64)
+    z[nz] = le.view("<u8").reshape(-1)
+    return z, counts, head
+
+
+def _one(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
+    return np.frombuffer(blob, dtype=np.uint8), np.array([0, len(blob)])
 
 
 def encode_timestamps_grouped(
     ts: np.ndarray, starts: np.ndarray, ends: np.ndarray
 ) -> list[bytes]:
-    """Grouped twin of ``encode_timestamps``: the delta-of-delta chain
-    restarts at each group boundary (first value raw, then the first delta),
-    computed for the whole batch at once; per-group blobs are byte-identical
-    to the scalar encoder's."""
+    """One delta-of-delta blob per group ``ts[starts[i]:ends[i]]``; the
+    groups tile ``ts`` in order."""
     t = np.ascontiguousarray(ts, dtype=np.int64)
-    n = len(t)
-    if n == 0:
-        return []
-    dod = np.empty(n, dtype=np.int64)
-    dod[0] = t[0]
-    if n > 1:
-        dod[1] = t[1] - t[0]
-    if n > 2:
-        dod[2:] = t[2:] - 2 * t[1:-1] + t[:-2]
-    dod[starts] = t[starts]
-    s2 = starts + 1
-    s2 = s2[s2 < ends]  # each group's second element stores the raw delta
-    dod[s2] = t[s2] - t[s2 - 1]
-    z = _zigzag(dod)
-    tzb, mb = _meaningful_bytes(z)
-    nbytes = (tzb + mb).astype(np.uint8)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(nbytes, out=offs[1:])
-    payload = np.zeros(int(offs[-1]), dtype=np.uint8)
-    lebytes = z.reshape(-1, 1).view(np.uint8).reshape(-1, 8)
-    for L in range(1, 9):
-        sel = np.nonzero(nbytes == L)[0]
-        if len(sel) == 0:
-            continue
-        idx = offs[sel][:, None] + np.arange(L)
-        payload[idx] = lebytes[sel][:, :L]
-    nbytes_b, payload_b = nbytes.tobytes(), payload.tobytes()
-    return [
-        _MAGIC_T
-        + np.uint32(b - a).tobytes()
-        + nbytes_b[a:b]
-        + payload_b[offs[a]:offs[b]]
-        for a, b in zip(starts, ends)
-    ]
+    counts = np.asarray(ends, dtype=np.int64) - np.asarray(starts, dtype=np.int64)
+    return _pack(_zigzag(_dod(t, counts)), counts, _head(_MAGIC_T, counts))
+
+
+def encode_floats_grouped(
+    values: np.ndarray, starts: np.ndarray, ends: np.ndarray
+) -> list[bytes]:
+    """One value blob per group ``values[starts[i]:ends[i]]``, each at its
+    own scale; the groups tile ``values`` in order."""
+    v = np.ascontiguousarray(values, dtype=np.float64)
+    counts = np.asarray(ends, dtype=np.int64) - np.asarray(starts, dtype=np.int64)
+    scale, q = _scales(v, counts)
+    z = np.where(
+        np.repeat(scale != _XOR, counts),
+        _zigzag(_dod(q, counts)),
+        _xor_words(v.view(np.uint64), counts),
+    )
+    return _pack(z, counts, _head(_MAGIC_F, counts, scale))
+
+
+def decode_timestamps_grouped(
+    buf: np.ndarray, offsets: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 timestamps of every blob concatenated, count per blob)."""
+    z, counts, _ = _unpack(buf, offsets, _MAGIC_T, 0)
+    return _undod(_unzigzag(z), counts), counts
+
+
+def decode_floats_grouped(
+    buf: np.ndarray, offsets: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(float64 values of every blob concatenated, count per blob)."""
+    z, counts, head = _unpack(buf, offsets, _MAGIC_F, 1)
+    scale = head[:, 3]
+    if ((scale > E_MAX) & (scale != _XOR)).any():
+        raise ValueError("value blob has an unknown scale byte: corrupt")
+    xor = scale == _XOR
+    at_xor = np.repeat(xor, counts)
+    out = np.empty(len(z), dtype=np.float64)
+    q = _undod(_unzigzag(z[~at_xor]), counts[~xor])
+    out[~at_xor] = q / np.repeat(_POW10[scale[~xor]], counts[~xor])
+    out[at_xor] = _unxor(z[at_xor], counts[xor]).view(np.float64)
+    return out, counts
+
+
+def encode_timestamps(ts: np.ndarray) -> bytes:
+    return encode_timestamps_grouped(ts, np.array([0]), np.array([len(ts)]))[0]
+
+
+def encode_floats(values: np.ndarray) -> bytes:
+    return encode_floats_grouped(values, np.array([0]), np.array([len(values)]))[0]
 
 
 def decode_timestamps(blob: bytes) -> np.ndarray:
-    assert blob[:3] == _MAGIC_T, "not a DD1 ts blob"
-    n = int(np.frombuffer(blob, dtype=np.uint32, count=1, offset=3)[0])
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    nbytes = np.frombuffer(blob, dtype=np.uint8, count=n, offset=7).astype(np.int64)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(nbytes, out=offs[1:])
-    payload = np.frombuffer(blob, dtype=np.uint8, offset=7 + n)
-    lebytes = np.zeros((n, 8), dtype=np.uint8)
-    for L in range(1, 9):
-        sel = np.nonzero(nbytes == L)[0]
-        if len(sel) == 0:
-            continue
-        idx = offs[sel][:, None] + np.arange(L)
-        lebytes[sel[:, None], np.arange(L)[None, :]] = payload[idx]
-    z = lebytes.reshape(-1).view(np.uint64)
-    dod = _unzigzag(z)
-    if n == 1:
-        return dod.copy()
-    d = dod.copy()
-    d[1:] = np.cumsum(dod[1:])  # deltas
-    out = d.copy()
-    out[0] = dod[0]
-    out[1:] = dod[0] + np.cumsum(d[1:])
-    return out
+    return decode_timestamps_grouped(*_one(blob))[0]
+
+
+def decode_floats(blob: bytes) -> np.ndarray:
+    return decode_floats_grouped(*_one(blob))[0]

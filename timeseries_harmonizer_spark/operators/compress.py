@@ -3,24 +3,31 @@ and back.
 
 The analog of the reference's output record batching (Kafka chunks of 500,
 reference lib2/__init__.py:54-61) re-designed for columnar storage: each
-(series, tier, UTC-day) chunk stores its window starts as a delta-of-delta
-blob and its values as a Gorilla-XOR blob (functions/compression.py), plus
+(series, tier, UTC-day) chunk stores its window starts and its values as
+two codec-v2 delta-of-delta blobs (functions/compression.py: decimal
+values as exact scaled integers, a bitmap for zero entries), plus
 uncompressed min/max/sum so coarse-tier downsampling and range pruning never
 decode blobs. Chunking by day bounds blob size (<= 1440 points at the 1m
 tier) regardless of series length — a hot url never produces an unbounded
 group.
 
-Execution shape: ``mapInPandas`` over url-partitioned, (url, chunk, start)-
-sorted data — one Python call per Arrow batch, group slicing vectorized
-with numpy inside the batch (an ``applyInPandas`` per (url, day) group paid
-~7 ms of per-group overhead x O(urls x days) tiny groups — 20x slower).
-Groups split across Arrow batch boundaries are carried over in a buffer.
+Execution shape: ``mapInArrow`` over url-partitioned, (url, chunk, start)-
+sorted data — one Python call per Arrow batch, with no pandas in between.
+Group boundaries come from Arrow compute on ``url`` and a numpy compare on
+the chunk; both blob columns are encoded in one vectorized pass over the
+batch, and the payload columns go back as Arrow arrays (an
+``applyInPandas`` per (url, day) group paid ~7 ms of per-group overhead x
+O(urls x days) tiny groups — 20x slower). A group split across Arrow batch
+boundaries is carried over to the next batch. Decoding reads each batch's
+two binary columns straight from their Arrow buffers and decodes all their
+blobs in one grouped call per column.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from timeseries_harmonizer_spark.functions import compression as C
@@ -30,37 +37,36 @@ PAYLOAD_SCHEMA = (
     "vmin double, vmax double, vsum double, "
     "ts_blob binary, val_blob binary"
 )
+_TS = pa.timestamp("us", tz="UTC")
 
 
-def _encode_groups(pdf: pd.DataFrame, tier_name: str) -> pd.DataFrame:
-    """pdf sorted by (url, chunk_s, start): one payload row per (url, chunk).
-
-    Whole-batch vectorized: group stats come from ufunc.reduceat and BOTH
-    blob streams are encoded in one pass over the batch
-    (encode_*_grouped), so per-group work is a byte-slice — not two numpy
-    encoder invocations per tiny (series, day) group (which dominated the
-    stage at ~100 us x O(series x days) calls)."""
-    urls = pdf["url"].to_numpy()
-    chunks = pdf["chunk_s"].to_numpy()
-    change = np.empty(len(pdf), dtype=bool)
-    change[0] = True
-    change[1:] = (urls[1:] != urls[:-1]) | (chunks[1:] != chunks[:-1])
+def _encode_groups(rows: pa.Table, tier_name: str) -> pa.Table:
+    """rows sorted by (url, chunk_s, start): one payload row per (url,
+    chunk). Group stats come from ufunc.reduceat and both blob columns
+    from one grouped encoder call each, so per-group work is a byte slice."""
+    n = rows.num_rows
+    url = rows.column("url")
+    chunks = rows.column("chunk_s").to_numpy()
+    change = np.ones(n, dtype=bool)
+    change[1:] = pc.not_equal(url.slice(1), url.slice(0, n - 1)).to_numpy() | (
+        chunks[1:] != chunks[:-1]
+    )
     starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], len(pdf))
-    ts_all = pdf["start"].astype("int64").to_numpy() // 10**9
-    v_all = pdf["value"].to_numpy(dtype="float64")
-    return pd.DataFrame(
+    ends = np.append(starts[1:], n)
+    ts = rows.column("start").cast(pa.int64()).to_numpy() // 10**6
+    v = rows.column("value").to_numpy().astype(np.float64)
+    return pa.Table.from_pydict(
         {
-            "url": urls[starts],
-            "tier": tier_name,
-            "chunk_start": pd.to_datetime(chunks[starts].astype("int64"), unit="s"),
-            "n": ends - starts,
+            "url": url.take(starts),
+            "tier": pa.array([tier_name] * len(starts), pa.string()),
+            "chunk_start": pa.array(chunks[starts] * 10**6, _TS),
+            "n": pa.array(ends - starts, pa.int64()),
             # fmin/fmax reduceat = nanmin/nanmax per group (NaN only if all-NaN)
-            "vmin": np.fmin.reduceat(v_all, starts),
-            "vmax": np.fmax.reduceat(v_all, starts),
-            "vsum": np.add.reduceat(np.nan_to_num(v_all, nan=0.0), starts),
-            "ts_blob": C.encode_timestamps_grouped(ts_all, starts, ends),
-            "val_blob": C.encode_floats_grouped(v_all, starts, ends),
+            "vmin": np.fmin.reduceat(v, starts),
+            "vmax": np.fmax.reduceat(v, starts),
+            "vsum": np.add.reduceat(np.nan_to_num(v, nan=0.0), starts),
+            "ts_blob": pa.array(C.encode_timestamps_grouped(ts, starts, ends), pa.binary()),
+            "val_blob": pa.array(C.encode_floats_grouped(v, starts, ends), pa.binary()),
         }
     )
 
@@ -94,51 +100,60 @@ def compress_points(
         "url", "chunk_s", "start"
     )
 
-    def fn(it):
-        buf: pd.DataFrame | None = None
-        for pdf in it:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
+    def fn(batches):
+        tail = None  # the last (url, chunk) group, which may continue
+        for batch in batches:
+            rows = pa.Table.from_batches([batch])
+            if tail is not None:
+                rows = pa.concat_tables([tail, rows]).combine_chunks()
+            n = rows.num_rows
+            if not n:
                 continue
-            # hold back the final (url, chunk) group — it may continue in
-            # the next Arrow batch
-            last_url = pdf["url"].iloc[-1]
-            last_chunk = pdf["chunk_s"].iloc[-1]
-            tail_mask = (pdf["url"] == last_url) & (pdf["chunk_s"] == last_chunk)
-            head = pdf[~tail_mask]
-            buf = pdf[tail_mask]
-            if len(head):
-                yield _encode_groups(head, tier_name)
-        if buf is not None and len(buf):
-            yield _encode_groups(buf, tier_name)
+            url, chunks = rows.column("url"), rows.column("chunk_s")
+            same = pc.and_(
+                pc.equal(url, url[n - 1]), pc.equal(chunks, chunks[n - 1])
+            ).to_numpy()
+            # sorted rows: the tail group is the run of rows equal to the last
+            cut = n - int(np.argmin(same[::-1])) if not same.all() else 0
+            tail = rows.slice(cut)
+            if cut:
+                yield from _encode_groups(rows.slice(0, cut), tier_name).to_batches()
+        if tail is not None and tail.num_rows:
+            yield from _encode_groups(tail, tier_name).to_batches()
 
-    return src.mapInPandas(fn, PAYLOAD_SCHEMA)
+    return src.mapInArrow(fn, PAYLOAD_SCHEMA)
+
+
+def _blobs(col: pa.BinaryArray) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes, offsets) of a binary column, read from its Arrow buffers."""
+    if col.null_count:
+        raise ValueError("payload row without a blob")
+    _, offsets, data = col.buffers()
+    offs = np.frombuffer(offsets, np.int32, len(col) + 1, col.offset * 4)
+    buf = np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8)
+    return buf, offs.astype(np.int64)
 
 
 def decompress_points(payloads: DataFrame) -> DataFrame:
     """Inverse: payload rows -> (url, tier, start, value) points."""
     out_schema = "url string, tier string, start timestamp, value double"
 
-    def fn(it):
-        for pdf in it:
-            if not len(pdf):
+    def fn(batches):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            # one decode call per blob (the codec boundary), but ONE output
-            # frame per Arrow batch: repeat the per-blob keys by decoded
-            # length instead of building a pandas frame per row (a frame per
-            # tiny blob dominated this stage the same way per-group encoder
-            # calls dominated the encode side)
-            ts_parts = [C.decode_timestamps(bytes(b)) for b in pdf["ts_blob"]]
-            val_parts = [C.decode_floats(bytes(b)) for b in pdf["val_blob"]]
-            lens = np.array([len(t) for t in ts_parts], dtype=np.int64)
-            yield pd.DataFrame(
+            ts, counts = C.decode_timestamps_grouped(*_blobs(batch.column("ts_blob")))
+            vals, val_counts = C.decode_floats_grouped(*_blobs(batch.column("val_blob")))
+            if not np.array_equal(counts, val_counts):
+                raise ValueError("a payload row's ts and value blobs differ in length")
+            row = np.repeat(np.arange(batch.num_rows), counts)
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "url": np.repeat(pdf["url"].to_numpy(), lens),
-                    "tier": np.repeat(pdf["tier"].to_numpy(), lens),
-                    "start": pd.to_datetime(np.concatenate(ts_parts), unit="s"),
-                    "value": np.concatenate(val_parts),
+                    "url": batch.column("url").take(row),
+                    "tier": batch.column("tier").take(row),
+                    "start": pa.array(ts * 10**6, _TS),
+                    "value": pa.array(vals, pa.float64()),
                 }
             )
 
-    return payloads.mapInPandas(fn, out_schema)
+    return payloads.mapInArrow(fn, out_schema)
