@@ -459,3 +459,23 @@ def test_evaluate_many_he_with_multifreq_leaf(spark):
     np.testing.assert_allclose(a, [1, 1, 0, 0, 1, 1])
     # device b's LOCF'd daily 5.0 > winter_min everywhere -> heating off
     np.testing.assert_allclose(b, [0.0] * 6)
+
+
+def test_upsample_duplicate_source_ts_deterministic(spark):
+    """A source series may hold two rows at one timestamp (SeriesRef takes
+    any frame). Which of them claims the upsampled slots must not depend on
+    input order: the larger value does, in one partition or several."""
+    days = pd.to_datetime(["2024-01-01", "2024-01-01", "2024-01-02"])
+    pdf = pd.DataFrame({"start": days, "value": [24.0, 48.0, 96.0]})
+    rev = pdf.iloc[::-1].reset_index(drop=True)
+
+    def run(df):
+        eng = FormulaEngine(spark, series={"D": SeriesRef(df, 86400, "SUM")})
+        return _vals(eng.evaluate("<mh>D</mh>", T0, T0 + pd.Timedelta(hours=47), H))
+
+    for df in (
+        spark.createDataFrame(pdf).coalesce(1),
+        spark.createDataFrame(rev).coalesce(1),
+        spark.createDataFrame(rev).repartition(3),
+    ):
+        assert np.allclose(run(df), [2.0] * 24 + [4.0] * 24)

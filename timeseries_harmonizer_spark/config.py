@@ -40,6 +40,14 @@ class TierConfig:
             )
 
     @property
+    def chunk_seconds(self) -> int:
+        """Span of one compressed payload chunk: 1,440 windows, so a blob
+        holds at most 1,440 points at every fixed-width tier (1m: 1 day,
+        1h: 60 days, 1d: 1,440 days). Chunks are epoch-aligned, and every
+        span is a whole number of UTC days."""
+        return 1440 * self.seconds
+
+    @property
     def interval(self) -> str:
         return f"{self.seconds} seconds"
 

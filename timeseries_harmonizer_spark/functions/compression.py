@@ -25,25 +25,34 @@ blob       := [magic:3][scale:uint8, value blobs only][n:varint]
   payload  := the low ``length`` bytes of each nonzero entry, little-endian
 
 z of a timestamp blob (int64 epoch values, any unit):
-  zigzag delta-of-delta: the first value raw, then the first delta, then
-  t[i] - 2 t[i-1] + t[i-2]. A regular series is all zeros after two.
-z of a value blob with scale e in 0..E_MAX:
-  the same chain over the int64 q = v * 10**e, where e is the smallest
+  zigzag delta-of-delta (order 2): the first value raw, then the first
+  delta, then t[i] - 2 t[i-1] + t[i-2]. A regular series is all zeros
+  after two.
+scale of a value blob := e | 0x00 (order 2) or e | 0x80 (order 1) for e
+  in 0..E_MAX, or 0xFF (XOR words); any other byte is corrupt
+z of a value blob with scale e (either order):
+  a zigzag chain over the int64 q = v * 10**e, where e is the smallest
   exponent for which q / 10**e reproduces every value of the blob bit for
   bit. Values rounded to d <= E_MAX decimals are stored exactly at e <= d.
+  Order 2 is the timestamps' delta-of-delta chain; order 1 is the first
+  value raw, then q[i] - q[i-1]. The encoder writes whichever gives the
+  blob fewer bytes, and order 2 on a tie: a ramp is all zeros at order 2,
+  held levels cost one entry per step at order 1 and two at order 2.
 z of a value blob with scale 0xFF (no e works: NaN, -0.0, inf,
   non-decimal doubles):
   u[i] ^ u[i-1] of the float64 bit patterns, u[-1] = 0. Decode is an XOR
   prefix scan, so every bit pattern round-trips.
 
 The grouped encoders take contiguous groups that tile one array (one group
-per (series, chunk)) and return one blob per group; the scalar encoders
+per (series, tier chunk)) and return one blob per group; the scalar encoders
 are their one-group case. The grouped decoders take the concatenated blob
 bytes and their offsets (an Arrow binary column's buffers) and return the
 concatenated points and each blob's point count. Decoders raise
 ``ValueError`` on a foreign or v1 magic and on a blob whose length
 disagrees with its header. v1 blobs (b"GX1"/b"DD1") are not decoded: every
 blob is derived data, and rerunning the compress stage rewrites it as v2.
+v2 blobs written before order 1 existed all have order 2 and decode as
+they did.
 """
 
 from __future__ import annotations
@@ -55,6 +64,7 @@ _MAGIC_F = b"DV2"
 _MAGIC_V1 = (b"GX1", b"DD1")
 E_MAX = 6
 _XOR = 0xFF
+_ORDER1 = 0x80  # scale-byte flag: the q chain is order 1, not order 2
 _VARINT_MAX = 5  # bytes of a varint n: 35 bits
 _POW10 = np.array([10.0**e for e in range(E_MAX + 1)])
 # an entry's byte count is how many of these it is >= to
@@ -96,27 +106,37 @@ def _nonempty(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return starts[keep], counts[keep]
 
 
-def _dod(x: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Delta-of-delta of int64 ``x``, restarting at each group with the
-    first value raw, then the first delta. int64 arithmetic wraps, and
-    ``_undod`` wraps back."""
+def _diff(x: np.ndarray, counts: np.ndarray, keep: int) -> np.ndarray:
+    """First differences of int64 ``x`` within each group, except that a
+    group's first ``keep`` entries stay as they are. int64 arithmetic
+    wraps, and ``_undiff`` wraps back."""
     starts, counts = _nonempty(counts)
-    dod = np.empty(len(x), dtype=np.int64)
-    dod[2:] = x[2:] - 2 * x[1:-1] + x[:-2]
-    second = (starts + 1)[counts > 1]
-    dod[second] = x[second] - x[second - 1]
-    dod[starts] = x[starts]
-    return dod
+    d = np.empty(len(x), dtype=np.int64)
+    d[:1] = x[:1]
+    np.subtract(x[1:], x[:-1], out=d[1:])
+    for j in range(keep):
+        at = (starts + j)[counts > j]
+        d[at] = x[at]
+    return d
 
 
-def _undod(dod: np.ndarray, counts: np.ndarray) -> np.ndarray:
+def _undiff(z: np.ndarray, counts: np.ndarray, order: int) -> np.ndarray:
+    """Inverse of the order-1 chain ``_diff(x, counts, 1)`` or of the
+    order-2 chain ``_diff(_diff(x, counts, 1), counts, 2)``."""
     starts, counts = _nonempty(counts)
-    x = dod.copy()
+    x = z.copy()
     x[starts] = 0
-    for _ in range(2):  # the deltas, then the values less the first
+    for _ in range(order):  # the deltas, then the values less the first
         c = np.cumsum(x)
         x = c - np.repeat(c[starts] - x[starts], counts)
-    return x + np.repeat(dod[starts], counts)
+    return x + np.repeat(z[starts], counts)
+
+
+def _chain_bytes(z: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Per group, the bytes ``_pack`` spends on its length nibbles and
+    payload (the bitmap and header do not depend on the chain)."""
+    lens = np.searchsorted(_BYTE_STEPS, z, side="right")
+    return (_group_sums(lens > 0, counts) + 1) // 2 + _group_sums(lens, counts)
 
 
 def _xor_words(u: np.ndarray, counts: np.ndarray) -> np.ndarray:
@@ -283,22 +303,29 @@ def encode_timestamps_grouped(
     groups tile ``ts`` in order."""
     t = np.ascontiguousarray(ts, dtype=np.int64)
     counts = np.asarray(ends, dtype=np.int64) - np.asarray(starts, dtype=np.int64)
-    return _pack(_zigzag(_dod(t, counts)), counts, _head(_MAGIC_T, counts))
+    dod = _diff(_diff(t, counts, 1), counts, 2)
+    return _pack(_zigzag(dod), counts, _head(_MAGIC_T, counts))
 
 
 def encode_floats_grouped(
     values: np.ndarray, starts: np.ndarray, ends: np.ndarray
 ) -> list[bytes]:
     """One value blob per group ``values[starts[i]:ends[i]]``, each at its
-    own scale; the groups tile ``values`` in order."""
+    own scale and in the shorter of its two chain orders (order 2 on a
+    tie); the groups tile ``values`` in order."""
     v = np.ascontiguousarray(values, dtype=np.float64)
     counts = np.asarray(ends, dtype=np.int64) - np.asarray(starts, dtype=np.int64)
     scale, q = _scales(v, counts)
+    d = _diff(q, counts, 1)
+    z1, z2 = _zigzag(d), _zigzag(_diff(d, counts, 2))
+    decimal = scale != _XOR
+    first = decimal & (_chain_bytes(z1, counts) < _chain_bytes(z2, counts))
     z = np.where(
-        np.repeat(scale != _XOR, counts),
-        _zigzag(_dod(q, counts)),
+        np.repeat(decimal, counts),
+        np.where(np.repeat(first, counts), z1, z2),
         _xor_words(v.view(np.uint64), counts),
     )
+    scale = np.where(first, scale | _ORDER1, scale)
     return _pack(z, counts, _head(_MAGIC_F, counts, scale))
 
 
@@ -307,7 +334,7 @@ def decode_timestamps_grouped(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(int64 timestamps of every blob concatenated, count per blob)."""
     z, counts, _ = _unpack(buf, offsets, _MAGIC_T, 0)
-    return _undod(_unzigzag(z), counts), counts
+    return _undiff(_unzigzag(z), counts, 2), counts
 
 
 def decode_floats_grouped(
@@ -316,14 +343,18 @@ def decode_floats_grouped(
     """(float64 values of every blob concatenated, count per blob)."""
     z, counts, head = _unpack(buf, offsets, _MAGIC_F, 1)
     scale = head[:, 3]
-    if ((scale > E_MAX) & (scale != _XOR)).any():
-        raise ValueError("value blob has an unknown scale byte: corrupt")
     xor = scale == _XOR
-    at_xor = np.repeat(xor, counts)
+    e = scale & (_ORDER1 - 1)
+    if ((e > E_MAX) & ~xor).any():
+        raise ValueError("value blob has an unknown scale byte: corrupt")
+    first = ((scale & _ORDER1) > 0) & ~xor
     out = np.empty(len(z), dtype=np.float64)
-    q = _undod(_unzigzag(z[~at_xor]), counts[~xor])
-    out[~at_xor] = q / np.repeat(_POW10[scale[~xor]], counts[~xor])
-    out[at_xor] = _unxor(z[at_xor], counts[xor]).view(np.float64)
+    at = np.repeat(xor, counts)
+    out[at] = _unxor(z[at], counts[xor]).view(np.float64)
+    for blobs, order in ((first, 1), (~first & ~xor, 2)):
+        at = np.repeat(blobs, counts)
+        q = _undiff(_unzigzag(z[at]), counts[blobs], order)
+        out[at] = q / np.repeat(_POW10[e[blobs]], counts[blobs])
     return out, counts
 
 

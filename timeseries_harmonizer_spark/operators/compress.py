@@ -1,26 +1,30 @@
-"""Compressed tier-payload stage: points -> per-(series, day-chunk) blobs
+"""Compressed tier-payload stage: points -> per-(series, tier chunk) blobs
 and back.
 
 The analog of the reference's output record batching (Kafka chunks of 500,
 reference lib2/__init__.py:54-61) re-designed for columnar storage: each
-(series, tier, UTC-day) chunk stores its window starts and its values as
-two codec-v2 delta-of-delta blobs (functions/compression.py: decimal
-values as exact scaled integers, a bitmap for zero entries), plus
+(series, tier, tier chunk) row stores its window starts and its values as
+two codec-v2 blobs (functions/compression.py: delta-of-delta timestamps,
+decimal values as exact scaled integers in the shorter of two delta
+orders, a bitmap for zero entries), plus
 uncompressed min/max/sum so coarse-tier downsampling and range pruning never
-decode blobs. Chunking by day bounds blob size (<= 1440 points at the 1m
-tier) regardless of series length — a hot url never produces an unbounded
-group.
+decode blobs. A tier chunk is ``TierConfig.chunk_seconds``, 1,440 of the
+tier's windows (1m: 1 day, 1h: 60 days, 1d: 1,440 days), epoch-aligned. So
+a blob holds at most 1,440 points at every fixed-width tier, whatever the
+series length: a hot url never produces an unbounded group, and a sparse
+coarse tier does not pay a blob header per few points.
 
 Execution shape: ``mapInArrow`` over url-partitioned, (url, chunk, start)-
 sorted data — one Python call per Arrow batch, with no pandas in between.
 Group boundaries come from Arrow compute on ``url`` and a numpy compare on
 the chunk; both blob columns are encoded in one vectorized pass over the
 batch, and the payload columns go back as Arrow arrays (an
-``applyInPandas`` per (url, day) group paid ~7 ms of per-group overhead x
-O(urls x days) tiny groups — 20x slower). A group split across Arrow batch
+``applyInPandas`` per (url, chunk) group paid ~7 ms of per-group overhead x
+O(urls x chunks) tiny groups — 20x slower). A group split across Arrow batch
 boundaries is carried over to the next batch. Decoding reads each batch's
-two binary columns straight from their Arrow buffers and decodes all their
-blobs in one grouped call per column.
+two binary columns straight from their Arrow buffers (32- or 64-bit
+offsets, as ``spark.sql.execution.arrow.useLargeVarTypes`` picks) and
+decodes all their blobs in one grouped call per column.
 """
 
 from __future__ import annotations
@@ -30,6 +34,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
+from timeseries_harmonizer_spark.config import TIERS
 from timeseries_harmonizer_spark.functions import compression as C
 
 PAYLOAD_SCHEMA = (
@@ -77,10 +82,11 @@ def compress_points(
     key: str = "url",
     start_col: str = "start",
     value: str = "value",
-    chunk_seconds: int = 86400,
     partitions: int | None = None,
 ) -> DataFrame:
-    """points (key, start, value) -> compressed per-day payload rows."""
+    """points (key, start, value) -> compressed payload rows, one per
+    (key, chunk of ``TIERS[tier_name].chunk_seconds``)."""
+    chunk_seconds = TIERS[tier_name].chunk_seconds
     src = points.select(
         F.col(key).alias("url"),
         F.col(start_col).alias("start"),
@@ -129,7 +135,8 @@ def _blobs(col: pa.BinaryArray) -> tuple[np.ndarray, np.ndarray]:
     if col.null_count:
         raise ValueError("payload row without a blob")
     _, offsets, data = col.buffers()
-    offs = np.frombuffer(offsets, np.int32, len(col) + 1, col.offset * 4)
+    width = np.dtype(np.int64 if pa.types.is_large_binary(col.type) else np.int32)
+    offs = np.frombuffer(offsets, width, len(col) + 1, col.offset * width.itemsize)
     buf = np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8)
     return buf, offs.astype(np.int64)
 

@@ -267,7 +267,14 @@ class FormulaEngine:
         t0s = F.lit(int(self._t0.timestamp()))
         t1s = F.lit(int(self._t1.timestamp()))
         s = F.unix_timestamp(F.col("__src_ts"))
-        lead_w = (W.partitionBy(*ks) if ks else W.partitionBy()).orderBy("__src_ts")
+        # a source frame may hold duplicate timestamps (SeriesRef takes any
+        # frame, and nothing upstream dedups it): the value tiebreak makes
+        # the largest duplicate the one that claims the slots, whatever
+        # the input order (the earlier ones get lead == their own ts and
+        # claim none)
+        lead_w = (W.partitionBy(*ks) if ks else W.partitionBy()).orderBy(
+            "__src_ts", "__v"
+        )
         nxt = F.unix_timestamp(F.lead("__src_ts").over(lead_w))
         # first grid slot >= source ts; last grid slot < next source ts
         first = F.greatest(t0s + F.ceil((s - t0s) / step) * step, t0s)
