@@ -1242,8 +1242,10 @@ def q36(spark, sf_dir):
     return out.select("query_id", "neighbor_id", "rank")
 
 
-# Exact-replay rollup through the chunked variant: month-long unsessionized
-# series would otherwise materialize a 2.6M-point 1s grid per Arrow group.
+# The 1s-grid AVG rollup on the tier pipeline's closed-form pass. The
+# rounding follows DuckDB's round(x, 5), which is round-half-away(x * 1e5)
+# / 1e5 on the binary double; Spark's F.round(x, 5) rounds the decimal form
+# half-up instead, and one window of 13,998 at sf0.01 came out 1e-5 apart.
 @_q(
     "q37_rollup_exact_replay",
     # Closed-form oracle for the 1s-interpolated AVG rollup: collapse points
@@ -1286,7 +1288,7 @@ def q36(spark, sf_dir):
     """,
 )
 def q37(spark, sf_dir):
-    from timeseries_harmonizer_spark.operators.rollup import rollup_exact_chunked
+    from timeseries_harmonizer_spark.operators.rollup import rollup_native
 
     ev = (
         _t(spark, sf_dir, EV)
@@ -1297,9 +1299,9 @@ def q37(spark, sf_dir):
             F.col("value"),
         )
     )
-    return rollup_exact_chunked(
-        ev, agg_func="AVG", freq_seconds=3600, session_col=None, chunk_windows=24
-    ).select("url", "start", F.round("value", 5).alias("value"))
+    return rollup_native(
+        ev.withColumn("agg_func", F.lit("AVG")), freq_seconds=3600, session_col=None
+    ).select("url", "start", (F.round(F.col("value") * 1e5) / 1e5).alias("value"))
 
 
 @_q(

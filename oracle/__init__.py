@@ -3,7 +3,7 @@ pandas, used only by tests to pin the Spark engine (SURVEY.md §5).
 
 The per-series kernels live in
 ``timeseries_harmonizer_spark.functions.series_kernels`` (the engine's
-Arrow replay path uses the same kernels by design — that's the
+Arrow cleaner stages use the same kernels by design — that's the
 exact-parity guarantee for the iterative operators). This module adds the
 *whole-pipeline* oracle: dedup -> enrich -> convert -> sessionize ->
 harmonize per url, independently of Spark, so the engine's native

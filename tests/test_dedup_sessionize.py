@@ -1,5 +1,6 @@
 """D1/D2 keep-last dedup and R5 sessionization vs pandas oracle."""
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -37,20 +38,36 @@ def test_keep_last_per_month(spark):
     assert list(out["ingest_pos"]) == [2, 4]
 
 
-def test_sessionize_matches_oracle(pages):
-    deduped = keep_last(pages)
-    got = (
-        sessionize(deduped, gap_seconds=7200)
-        .select("url", "warc_ts", "session_id")
-        .toPandas()
-        .sort_values(["url", "warc_ts"])
+def test_sessionize_matches_oracle(spark, pages):
+    """The shared fixture at a 7200 s gap, and a sub-second series at a
+    300 s gap: both sides measure gaps in whole floored seconds, so 5030.0
+    -> 5330.3 s (300 s) and 5330.3 -> 5630.9 s (300 s) stay in one session
+    and 5630.9 -> 5931.0 s (301 s) splits."""
+    subsec = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": "subsec",
+                "warc_ts": pd.to_datetime(
+                    1704067200_000 + np.array([5030_000, 5330_300, 5630_900, 5931_000]),
+                    unit="ms",
+                ),
+            }
+        )
     )
-    pdf = deduped.select("url", "warc_ts").toPandas()
-    for url, grp in pdf.groupby("url"):
-        grp = grp.sort_values("warc_ts")
-        idx = pd.DatetimeIndex(grp["warc_ts"])
-        expected = K.session_ids(idx, 7200)
-        g = got[got["url"] == url]["session_id"].to_numpy()
-        assert (g == expected).all(), url
-    # at least one url actually splits (gaps are injected)
-    assert got["session_id"].max() > 0
+    for df, gap in ((keep_last(pages), 7200), (subsec, 300)):
+        got = (
+            sessionize(df, gap_seconds=gap)
+            .select("url", "warc_ts", "session_id")
+            .toPandas()
+            .sort_values(["url", "warc_ts"])
+        )
+        pdf = df.select("url", "warc_ts").toPandas()
+        for url, grp in pdf.groupby("url"):
+            grp = grp.sort_values("warc_ts")
+            idx = pd.DatetimeIndex(grp["warc_ts"])
+            expected = K.session_ids(idx, gap)
+            g = got[got["url"] == url]["session_id"].to_numpy()
+            assert (g == expected).all(), (url, g, expected)
+        # at least one url actually splits (gaps are injected)
+        assert got["session_id"].max() > 0
+    assert got["session_id"].tolist() == [0, 0, 0, 1]  # the sub-second series

@@ -10,6 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+PYTHON_NODES = (
+    "BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas",
+)
 
 
 def _plan(df) -> str:
@@ -39,16 +42,19 @@ def test_broadcast_join_for_small_dim(spark):
 
 
 def test_rollup_native_stays_codegen(spark, pages, reg):
-    """The closed-form rollup path must contain no Python (BatchEvalPython /
-    ArrowEvalPython / FlatMapGroupsInPandas) nodes."""
+    """The closed-form rollup path must contain no Python node, both on the
+    tier pipeline and in the contract's 1s-grid replay query q37."""
+    import __spark_entry__ as entry
     from timeseries_harmonizer_spark.config import TIERS
     from timeseries_harmonizer_spark.operators.rollup import rollup_native
     from timeseries_harmonizer_spark.plans.pipeline import prepare
 
-    q = rollup_native(prepare(pages, reg, TIERS["1h"]), freq_seconds=3600)
-    plan = _plan(q)
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
-        assert bad not in plan, f"{bad} found in native rollup plan"
+    tier_q = rollup_native(prepare(pages, reg, TIERS["1h"]), freq_seconds=3600)
+    q37 = entry.queries()["q37_rollup_exact_replay"](spark, SF)
+    for name, q in (("tier", tier_q), ("q37", q37)):
+        plan = _plan(q)
+        for bad in PYTHON_NODES:
+            assert bad not in plan, f"{bad} found in {name} rollup plan:\n{plan}"
     # (AQE formatted explain shows codegen ids only after execution, so the
     # positive codegen check lives in test_filter_and_column_pushdown)
 
@@ -150,42 +156,6 @@ def test_boilerplate_filter_never_shuffles_text(spark):
         assert "text" not in cols, plan
 
 
-def test_bucketed_table_kills_cross_job_shuffles(spark, tmp_path):
-    """write_bucketed/read_bucketed: at-rest bucketing must satisfy the
-    downstream distribution requirements — a url-keyed aggregate over the
-    bucketed table plans with ZERO exchanges, and a bucketed-bucketed
-    equi-join sort-merges with no shuffle on either side (broadcast
-    disabled to prove it's the bucketing, not a small-table fallback)."""
-    import pandas as pd
-
-    from timeseries_harmonizer_spark.sources.tables import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "url": [f"u{i % 20}" for i in range(2000)],
-            "start": pd.date_range("2024-01-01", periods=2000, freq="1min"),
-            "value": 1.0,
-        }
-    )
-    write_bucketed(spark.createDataFrame(pdf), "pts_bkt_test", n_buckets=8)
-    t = read_bucketed(spark, "pts_bkt_test")
-    agg_plan = _plan(t.groupBy("url").sum("value"))
-    assert "Exchange" not in agg_plan, agg_plan
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        join_plan = _plan(
-            t.alias("a").join(read_bucketed(spark, "pts_bkt_test").alias("b"), "url")
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "SortMergeJoin" in join_plan, join_plan
-    assert "Exchange" not in join_plan, join_plan
-
-
 def test_zipf_fixture_partition_balance(spark):
     """SURVEY §4 hot-domain skew, MEASURED: the generator's Zipf domain heat
     concentrates urls under few domains, but the engine partitions on the
@@ -214,61 +184,6 @@ def test_zipf_fixture_partition_balance(spark):
     assert float(sizes.max()) <= 3.0 * med, (
         f"partition skew: max={sizes.max()} median={med}"
     )
-
-
-def test_hot_series_task_input_bounded(spark):
-    """One pathological hot SERIES (40k points, single session) vs cold
-    urls: rollup_exact_chunked's (url, session, time-chunk) grouping bounds
-    every Arrow group's input regardless of how hot the series is —
-    measured at its default chunk span, not asserted from the plan."""
-    import inspect
-
-    import numpy as np
-    import pandas as pd
-
-    from timeseries_harmonizer_spark.operators.rollup import rollup_exact_chunked
-
-    chunk_windows = (
-        inspect.signature(rollup_exact_chunked).parameters["chunk_windows"].default
-    )
-
-    cadence = 30
-    n_hot = 40_000
-    hot = pd.DataFrame(
-        {
-            "url": "hot",
-            "warc_ts": pd.to_datetime(
-                1704067200 + cadence * np.arange(n_hot), unit="s"
-            ),
-            "value": 1.0,
-        }
-    )
-    cold = pd.DataFrame(
-        {
-            "url": [f"c{i}" for i in range(60) for _ in range(50)],
-            "warc_ts": pd.to_datetime(
-                1704067200 + 3600 * np.tile(np.arange(50), 60), unit="s"
-            ),
-            "value": 1.0,
-        }
-    )
-    df = spark.createDataFrame(pd.concat([hot, cold]))
-    span = chunk_windows * 3600
-    groups = (
-        df.groupBy(
-            "url", F.floor(F.unix_timestamp("warc_ts") / span).alias("chunk")
-        )
-        .count()
-        .toPandas()
-    )
-    bound = span // cadence + 1  # densest possible chunk at this cadence
-    assert groups["count"].max() <= bound, (groups["count"].max(), bound)
-    hot_total = groups[groups["url"] == "hot"]["count"].sum()
-    assert hot_total == n_hot
-    # the hot series really was split: its max task input is a small
-    # fraction of its total volume
-    hot_max = groups[groups["url"] == "hot"]["count"].max()
-    assert hot_max * 10 <= hot_total, (hot_max, hot_total)
 
 
 def _fact_exchanges(plan: str) -> list[tuple[str, str]]:
@@ -322,42 +237,6 @@ def test_run_tier_points_one_pass(spark, pages, tmp_path):
     assert pts.collect()  # executes this plan, so AQE's final plan shows
     plan = _plan(pts)
     assert "isFinalPlan=true" in plan, plan
-    for bad in (
-        "InMemoryRelation", "InMemoryTableScan", "Union",
-        "BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
-        "MapInPandas",
-    ):
+    for bad in ("InMemoryRelation", "InMemoryTableScan", "Union", *PYTHON_NODES):
         assert bad not in plan, f"{bad} found in run_tier points plan:\n{plan}"
     assert _fact_exchanges(plan) == [("url", "REPARTITION_BY_NUM")], plan
-
-
-def test_chunked_sum_preagg_adds_no_fact_exchange(spark, pages, reg, tmp_path):
-    """r5: the native 1s-collision pre-aggregate in rollup_exact_chunked's
-    SUM path must ride the negative-diff window's hash partitioning — the
-    only fact exchange in the whole plan remains prepare's explicit url
-    repartition, with the groupBy(keys, second) satisfied as a subset
-    clustering (partial agg combines collisions map-side, no new shuffle)
-    and the chunk/overlap/applyInPandas stages co-partitioned after it."""
-    from timeseries_harmonizer_spark.config import TIERS
-    from timeseries_harmonizer_spark.operators.rollup import rollup_exact_chunked
-    from timeseries_harmonizer_spark.plans.pipeline import prepare
-
-    from timeseries_harmonizer_spark.sources.webpages import registry
-
-    path = str(tmp_path / "pages_pq4")
-    pages.write.parquet(path)
-    stored = spark.read.parquet(path)
-    prepared = prepare(stored, registry(spark, stored), TIERS["1h"]).where(
-        F.col("agg_func") == "SUM"
-    )
-    q = rollup_exact_chunked(
-        prepared, agg_func="SUM", freq_seconds=3600,
-        session_col="session_id", chunk_windows=5,
-    )
-    plan = _plan(q)
-    fact_blocks = _fact_exchanges(plan)
-    assert fact_blocks, plan
-    for key, origin in fact_blocks:
-        assert key == "url" and origin == "REPARTITION_BY_NUM", (
-            f"unexpected fact exchange ({key}, {origin}):\n{plan}"
-        )

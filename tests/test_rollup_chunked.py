@@ -1,82 +1,42 @@
-"""Chunked rollups: the exact replay's time-salted Arrow groups and the
-native pass's two-level explode stay bounded for hot and sparse series and
-give the same values as one unbounded pass. Oracle parity of the chunked
-replay is in test_rollup_parity.py."""
+"""Hot and sparse series on the native rollup pass: a 50k-point url and a
+url with 300k raw rows in five minutes both match the pandas replay, the
+latter with the window buffers forced to spill; the two-level explode stays
+bounded over a long sparse span and gives the same rows and values as one
+unbounded explode. Oracle parity at every tier is in
+test_rollup_parity.py."""
 
 import numpy as np
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from timeseries_harmonizer_spark.config import TIERS
 from timeseries_harmonizer_spark.functions import series_kernels as K
-from timeseries_harmonizer_spark.operators.rollup import rollup_exact_chunked
+from timeseries_harmonizer_spark.operators.rollup import rollup_native
 from timeseries_harmonizer_spark.plans import pipeline
-
-
-@pytest.mark.parametrize("agg", ["SUM", "AVG"])
-def test_chunked_equals_unchunked(spark, pages, reg, agg):
-    """Chunk edges change nothing: aggressively small chunks give the same
-    rows and values as a span wide enough that every session is one chunk
-    (no overlap rows), i.e. the unchunked replay."""
-    tier = TIERS["1h"]
-    prepared = pipeline.prepare(pages, reg, tier).where(F.col("agg_func") == agg)
-
-    def run(cw):
-        return (
-            rollup_exact_chunked(
-                prepared,
-                agg_func=agg,
-                freq_seconds=tier.seconds,
-                session_col="session_id",
-                chunk_windows=cw,
-            )
-            .toPandas()
-            .sort_values(["url", "start"])
-            .reset_index(drop=True)
-        )
-
-    base = run(10**6)  # ~114 years per chunk: one chunk per session
-    chunked = run(3)  # aggressively small chunks to stress boundaries
-    assert len(base) == len(chunked) >= 1, (len(base), len(chunked))
-    assert (base["url"].to_numpy() == chunked["url"].to_numpy()).all()
-    assert (base["start"].to_numpy() == chunked["start"].to_numpy()).all()
-    np.testing.assert_allclose(
-        chunked["value"].to_numpy(), base["value"].to_numpy(), rtol=0, atol=1e-9
-    )
 
 
 def test_hot_series_chunked(spark):
     """Skew demonstration: one pathological hot url (50k points, one
-    session) — the chunked path splits it into bounded Arrow groups and
-    still matches the closed-form native path post-round."""
-    import pandas as pd
-    import numpy as np
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native
-
+    session, ~32 days) runs through the native pass and matches the pandas
+    1s-grid replay of the whole series."""
     n = 50_000
     rng = np.random.default_rng(11)
     idx = pd.to_datetime(1704067200 + np.cumsum(rng.integers(20, 90, n)), unit="s")
-    pdf = pd.DataFrame({"url": "hot", "warc_ts": idx, "value": rng.normal(100, 3, n)})
-    df = spark.createDataFrame(pdf)
-    chunked = (
-        rollup_exact_chunked(
-            df, agg_func="AVG", freq_seconds=3600, session_col=None, chunk_windows=6
-        )
-        .toPandas()
-        .sort_values("start")
-        .reset_index(drop=True)
+    vals = rng.normal(100, 3, n)
+    df = spark.createDataFrame(
+        pd.DataFrame({"url": "hot", "warc_ts": idx, "value": vals, "agg_func": "AVG"})
     )
     native = (
-        rollup_native(
-            df.withColumn("agg_func", F.lit("AVG")), freq_seconds=3600, session_col=None
-        )
+        rollup_native(df, freq_seconds=3600, session_col=None)
         .toPandas()
         .sort_values("start")
         .reset_index(drop=True)
     )
-    assert len(chunked) == len(native) > 100
+    base = K.harmonize(pd.Series(vals, index=idx), "AVG", 3600)
+    assert len(native) == len(base) > 100
+    assert (pd.DatetimeIndex(native["start"]) == base.index).all()
     np.testing.assert_allclose(
-        chunked["value"].to_numpy(), native["value"].to_numpy(), rtol=0, atol=1e-6
+        native["value"].to_numpy(), base.to_numpy(), rtol=0, atol=1e-6
     )
 
 
@@ -84,8 +44,6 @@ def test_last_chunked_equals_unchunked(spark, pages, reg):
     """The chunked two-level explode (bounded batches of LAST claims and
     SUM/AVG segments) must be row- and value-identical to one chunk over
     the whole span."""
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native
-
     tier = TIERS["1h"]
     prepared = pipeline.prepare(pages, reg, tier)
 
@@ -120,10 +78,6 @@ def test_last_sparse_long_span_bounded(spark):
     the whole span in bounded chunks (40 days of minutes crosses 50k),
     LOCF the hole from the first value, and keep is_real only where raw
     observations exist."""
-    import pandas as pd
-
-    from timeseries_harmonizer_spark.operators.rollup import rollup_native
-
     t0 = pd.Timestamp("2024-01-01 00:00:00")
     t1 = t0 + pd.Timedelta(days=40)
     df = spark.createDataFrame(
@@ -149,13 +103,11 @@ def test_last_sparse_long_span_bounded(spark):
 
 @pytest.mark.parametrize("agg", ["SUM", "AVG"])
 def test_mega_collision_bounded_groups(spark, agg):
-    """r4 verdict #5: 300k raw rows crammed into ~300 seconds of ONE url —
-    without the native 1s pre-aggregate this is a single 300k-row Arrow
-    group; with it every group is hard-bounded at chunk_windows*freq rows
-    (the kernel ASSERTS the bound, so passing proves it) and values still
-    match the pandas kernel run over the whole series."""
-    import pandas as pd
-
+    """The hot-series contract of rollup_native: 300k raw rows crammed into
+    ~300 seconds of ONE url pass the negative-diff window as one 300k-row
+    partition, and its knots the lead window. With the window buffers
+    forced to spill to disk every 1,024 rows, values still match the pandas
+    kernel run over the whole series."""
     n = 300_000
     rng = np.random.default_rng(5)
     secs = 1704067200 + rng.integers(0, 300, n)  # ~1000 collisions/second
@@ -168,20 +120,28 @@ def test_mega_collision_bounded_groups(spark, agg):
         (secs - secs[0]) * 1.0 if agg == "SUM" else rng.normal(100, 3, n)
     )
     pdf = pd.DataFrame(
-        {"url": "hot", "warc_ts": pd.to_datetime(secs, unit="s"), "value": vals}
+        {"url": "hot", "warc_ts": pd.to_datetime(secs, unit="s"), "value": vals,
+         "agg_func": agg}
     )
     df = spark.createDataFrame(pdf)
-    chunked = (
-        rollup_exact_chunked(
-            df, agg_func=agg, freq_seconds=60, session_col=None, chunk_windows=2
-        )  # bound: 2*60 rows + 1 overlap per Arrow group
-        .toPandas().sort_values("start").reset_index(drop=True)
-    )
+    key = "spark.sql.windowExec.buffer.spill.threshold"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "1024")
+    try:
+        got = (
+            rollup_native(df, freq_seconds=60, session_col=None)
+            .toPandas().sort_values("start").reset_index(drop=True)
+        )
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
     base = K.harmonize(
         pd.Series(vals, index=pd.DatetimeIndex(pdf["warc_ts"])), agg, 60
     )
-    assert len(chunked) == len(base) >= 1
-    assert (pd.DatetimeIndex(chunked["start"]) == base.index).all()
+    assert len(got) == len(base) >= 1
+    assert (pd.DatetimeIndex(got["start"]) == base.index).all()
     np.testing.assert_allclose(
-        chunked["value"].to_numpy(), base.to_numpy(), rtol=1e-9, atol=1e-6
+        got["value"].to_numpy(), base.to_numpy(), rtol=1e-9, atol=1e-6
     )

@@ -6,10 +6,10 @@ function). They run in two places:
 
 1. inside Arrow-batched ``applyInPandas`` stages of the Spark engine, for
    the operators whose semantics are iterative / data-dependent and cannot
-   be a closed-form Catalyst expression (R1/R2 1s-grid resample-interp,
-   C2 znorm, C9 modbus rebuild, K1 PV repair);
+   be a closed-form Catalyst expression (C2 znorm, C9 modbus rebuild, K1
+   PV repair);
 2. in the pytest oracle, which replays them per series to pin the engine's
-   native (pure-DataFrame) fast paths.
+   native (pure-DataFrame) paths, the R1/R2/R3 rollups among them.
 
 Every function takes/returns pandas objects with a UTC ``DatetimeIndex``
 named ``timestamp`` and a float ``value`` column, mirroring the reference's
@@ -87,10 +87,11 @@ def harmonize(series: pd.Series, agg_func: str, freq_seconds: int) -> pd.Series:
 
 def session_ids(index: pd.DatetimeIndex, gap_seconds: int | None) -> np.ndarray:
     """0-based session id per row; increments where the gap to the previous
-    row exceeds gap_seconds."""
+    row exceeds gap_seconds. Gaps are measured between floored whole epoch
+    seconds, as in ``operators.sessionize.sessionize``."""
     if gap_seconds is None or len(index) == 0:
         return np.zeros(len(index), dtype="int64")
-    deltas = index.to_series().diff().dt.total_seconds().to_numpy()
+    deltas = index.floor("s").to_series().diff().dt.total_seconds().to_numpy()
     breaks = np.nan_to_num(deltas, nan=0.0) > gap_seconds
     return np.cumsum(breaks).astype("int64")
 
@@ -335,46 +336,3 @@ def pv_energy_balance(gen: pd.Series, exp: pd.Series) -> tuple[bool, pd.Series]:
                 e[j] = g[j]
                 over += -cap
     return update, pd.Series(e, index=exp.index)
-
-
-# ---------------------------------------------------------------------------
-# Chunked partials for the exact-replay path (scale/salting support)
-# ---------------------------------------------------------------------------
-
-def rollup_sum_partials(series: pd.Series, freq_seconds: int) -> pd.DataFrame:
-    """Per-window partial (count, sum) of kept 1s-grid increments for ONE
-    chunk of a series (negative-diff rows must already be dropped upstream).
-    Mergeable across chunks: counts/sums add, the completeness gate
-    (count == freq) applies after the merge."""
-    s = series.dropna()
-    if len(s) < 2:
-        return pd.DataFrame(columns=["start", "cnt", "total"])
-    grid = s.resample("1s").mean().interpolate(method="linear")
-    inc = grid.diff()
-    inc = inc[inc >= 0]
-    freq = pd.Timedelta(seconds=freq_seconds)
-    cnt = inc.resample(freq).count()
-    total = inc.resample(freq).sum()
-    out = pd.DataFrame({"start": cnt.index, "cnt": cnt.to_numpy(), "total": total.to_numpy()})
-    return out[out["cnt"] > 0]
-
-
-def rollup_avg_partials(
-    series: pd.Series, freq_seconds: int, drop_first_grid_second: bool = False
-) -> pd.DataFrame:
-    """Per-window partial (count, sum) of 1s-grid values for one chunk.
-    ``drop_first_grid_second`` excludes the overlap point's own grid second
-    (it belongs to the previous chunk) so merged counts are exact."""
-    s = series.dropna()
-    if s.empty:
-        return pd.DataFrame(columns=["start", "cnt", "total"])
-    grid = s.resample("1s").mean().interpolate(method="linear")
-    if drop_first_grid_second and len(grid) > 0:
-        grid = grid.iloc[1:]
-    if grid.empty:
-        return pd.DataFrame(columns=["start", "cnt", "total"])
-    freq = pd.Timedelta(seconds=freq_seconds)
-    cnt = grid.resample(freq).count()
-    total = grid.resample(freq).sum()
-    out = pd.DataFrame({"start": cnt.index, "cnt": cnt.to_numpy(), "total": total.to_numpy()})
-    return out[out["cnt"] > 0]

@@ -1,25 +1,17 @@
 """Rollup / resample operators — R1-R10 (SURVEY.md §2.5).
 
-Two implementations of the reference's ``harmonize_irregular_data``
-(reference lib2/__init__.py:26-42):
-
-1. ``rollup_native`` — the tier pipeline's one rollup pass: SUM, AVG and
-   LAST in one closed-form, pure-DataFrame pass. Key observation: after
-   placing each point at ``floor(ts, 1s)`` and linearly interpolating, the
-   per-second increment is *constant within each inter-point segment*
-   (slope = dv/ds). So the tier-window sum/count/mean are exact
-   segment-overlap arithmetic — no 1s grid is ever materialized. Each
-   segment explodes into only the tier windows it overlaps (len/F + 1
-   rows); LAST's per-window last knot explodes into the windows it carries
-   forward (LOCF); a single groupBy(key, window) merges. Mathematically
-   identical to the replay; floating-point addition order differs, so
-   parity tests compare post-round(5).
-
-2. ``rollup_exact_chunked`` — Arrow-batched ``applyInPandas`` per
-   (series, session, time chunk) replaying the reference's 1s-grid
-   resample + linear-interpolation semantics for SUM and AVG. Time chunks
-   salt the group key, so a hot series never becomes one unbounded Arrow
-   group. It runs the q37 replay query, not the tier pipeline.
+``rollup_native`` is the one implementation of the reference's
+``harmonize_irregular_data`` (reference lib2/__init__.py:26-42) for
+fixed-width tiers: SUM, AVG and LAST in one closed-form, pure-DataFrame
+pass. Key observation: after placing each point at ``floor(ts, 1s)`` and
+linearly interpolating, the per-second increment is *constant within each
+inter-point segment* (slope = dv/ds). So the tier-window sum/count/mean are
+exact segment-overlap arithmetic — no 1s grid is ever materialized. Each
+segment explodes into only the tier windows it overlaps (len/F + 1 rows);
+LAST's per-window last knot explodes into the windows it carries forward
+(LOCF); a single groupBy(key, window) merges. Mathematically identical to
+the pandas 1s-grid replay (``series_kernels.harmonize``); floating-point
+addition order differs, so values agree up to float rounding.
 
 ``rollup_native_last`` runs LAST over calendar (P1W/P1M) windows.
 
@@ -32,8 +24,6 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
-
-from timeseries_harmonizer_spark.functions import series_kernels as K
 
 
 def _window_col(ts_seconds_or_col, freq: int | str, is_ts: bool = False):
@@ -57,7 +47,7 @@ def _calendar_interval(freq: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Native closed form (scale path)
+# Native closed form
 # ---------------------------------------------------------------------------
 
 def _knots(df, key, ts_col, value, session_col):
@@ -126,6 +116,14 @@ def rollup_native(
     outer sequence steps in spans of ``chunk_windows`` windows, the inner in
     windows — so no generator batch exceeds ``chunk_windows`` rows (~35
     days at 1m, ~5.7 years at 1h).
+
+    Hot series: one url costs one task. Prepare's url exchange already puts
+    all of a url's rows in one task, and no Python worker ever holds a
+    series: its raw rows pass the negative-diff ``lag`` window, its knots
+    (at most one per second) the ``lead`` window. Both windows' buffers
+    spill to disk past ``spark.sql.windowExec.buffer.spill.threshold`` rows,
+    and each explode batch is at most ``chunk_windows`` rows (pinned with a
+    1,024-row spill threshold by tests/test_rollup_chunked.py).
 
     Precondition: ``session_col`` splits a series only at gaps of at least
     ``freq_seconds`` (``gap_seconds is None or gap_seconds >= seconds``,
@@ -524,99 +522,3 @@ def continuous_aggregate(
         "len_sum",
         "lang_counts",
     )
-
-
-# ---------------------------------------------------------------------------
-# Chunked exact replay — bounded Arrow-group memory for hot series
-# ---------------------------------------------------------------------------
-
-def rollup_exact_chunked(
-    df: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    value: str = "value",
-    agg_func: str = "SUM",  # SUM | AVG (LAST is fully native)
-    freq_seconds: int = 3600,
-    session_col: str | None = "session_id",
-    chunk_windows: int = 24,
-) -> DataFrame:
-    """Exact-replay rollup with *time-chunked* Arrow groups: the salted-key
-    analog for hot series. Group key = (key, session, chunk) where chunk =
-    floor(ts / (chunk_windows * freq)); each chunk also receives a one-point
-    overlap (the previous chunk's last row) so the 1s interpolation across
-    the boundary is identical to replaying the whole series at once.
-    Kernels emit per-window (count, sum) partials; a native merge re-gates
-    completeness (count == freq) after summation — the same windows, values
-    equal up to float addition order, and bounded memory: a chunk's 1s grid
-    never exceeds chunk_windows * freq seconds (+gap).
-
-    Negative-diff dropping (R1 step 1) runs as a native window op BEFORE
-    chunking, because a dropped row changes its neighbors' interpolation —
-    it must be decided globally, not per chunk.
-
-    The kernel's FIRST replay step — the 1s-floor mean over colliding raw
-    rows — is associative, so it runs natively (groupBy second + avg)
-    BEFORE the Arrow boundary: a url+second with 10^6 raw collisions is
-    collapsed map-side by the partial aggregate, and every Arrow group is
-    hard-bounded at chunk_windows*freq_seconds rows (+1 overlap) no matter
-    how degenerate the raw input (r4 verdict #5). The kernel enforces the
-    bound with an assertion rather than trusting it. For SUM the pre-agg
-    rides the negative-diff window's existing hash partitioning (keys ⊆
-    grouping → no extra exchange); for AVG it IS the first exchange and
-    shuffles only per-second partials, never raw collisions.
-    """
-    from timeseries_harmonizer_spark.operators.cleaning import drop_negative_diffs
-
-    assert agg_func in ("SUM", "AVG")
-    span = chunk_windows * freq_seconds
-    keys = [key] + ([session_col] if session_col else [])
-    df = df.where(F.col(value).isNotNull()).select(*keys, ts_col, value)
-    if agg_func == "SUM":
-        df = drop_negative_diffs(df, keys, ts_col, value)
-    # native 1s-collision collapse == the kernel's resample('1s').mean()
-    df = df.groupBy(
-        *keys, F.date_trunc("second", F.col(ts_col)).alias(ts_col)
-    ).agg(F.avg(value).alias(value))
-    ts_s = F.unix_timestamp(F.col(ts_col))
-    df = df.withColumn("__chunk", F.floor(ts_s / span))
-    w = W.partitionBy(*keys).orderBy(ts_col)
-    nxt_chunk = F.lead("__chunk").over(w)
-    # duplicate boundary rows into the next chunk as its overlap point
-    overlap = (
-        df.withColumn("__next", nxt_chunk)
-        .where(F.col("__next").isNotNull() & (F.col("__next") != F.col("__chunk")))
-        .withColumn("__chunk", F.col("__next"))
-        .withColumn("__is_overlap", F.lit(True))
-        .drop("__next")
-    )
-    tagged = df.withColumn("__is_overlap", F.lit(False)).unionByName(overlap)
-
-    kernel_drop_first = agg_func == "AVG"
-    out_schema = f"{key} string, start timestamp, cnt long, total double"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > span + 1:  # pre-agg guarantees ≤1 row/second + overlap
-            raise AssertionError(
-                f"Arrow group exceeds pre-agg bound: {len(pdf)} > {span + 1}"
-            )
-        pdf = pdf.sort_values(ts_col)
-        s = pd.Series(pdf[value].to_numpy(), index=pd.DatetimeIndex(pdf[ts_col]))
-        has_overlap = bool(pdf["__is_overlap"].iloc[0]) if len(pdf) else False
-        if agg_func == "SUM":
-            part = K.rollup_sum_partials(s, freq_seconds)
-        else:
-            part = K.rollup_avg_partials(
-                s, freq_seconds, drop_first_grid_second=has_overlap
-            )
-        part[key] = pdf[key].iloc[0]
-        return part[[key, "start", "cnt", "total"]]
-
-    partials = tagged.groupBy(*keys, "__chunk").applyInPandas(fn, out_schema)
-    merged = partials.groupBy(key, "start").agg(
-        F.sum("cnt").alias("__cnt"), F.sum("total").alias("__total")
-    )
-    gated = merged.where(F.col("__cnt") == freq_seconds)
-    val = (
-        F.col("__total") if agg_func == "SUM" else F.col("__total") / F.col("__cnt")
-    )
-    return gated.select(key, "start", val.alias(value))

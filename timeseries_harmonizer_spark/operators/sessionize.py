@@ -22,7 +22,13 @@ def sessionize(
     out_col: str = "session_id",
 ) -> DataFrame:
     """Assign a session id per (key) that increments when the gap to the
-    previous row exceeds ``gap_seconds``. ``None`` -> single session."""
+    previous row exceeds ``gap_seconds``. ``None`` -> single session.
+
+    The gap is measured in whole seconds, between the floored epoch seconds
+    (``unix_timestamp``) of the two rows: rows at 5030.0 s and 5330.3 s are
+    300 s apart, so a 300 s gap does not split them. This is the unit of the
+    contract's session SQL (``floor(epoch(ts))``) and of the pandas oracle's
+    ``series_kernels.session_ids``."""
     if gap_seconds is None:
         return df.withColumn(out_col, F.lit(0).cast("long"))
     w = W.partitionBy(key).orderBy(ts_col)

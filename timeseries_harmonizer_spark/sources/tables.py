@@ -520,45 +520,3 @@ class Catalog:
         for v in expired:
             os.unlink(self._version_path(name, v))
         return len(drop_files)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    n_buckets: int = 64,
-    bucket_cols: list[str] | tuple[str, ...] = ("url",),
-    sort_cols: list[str] | tuple[str, ...] = ("url", "start"),
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table hash-bucketed (and sorted) on its series key — the
-    cross-JOB co-location lever: a plain parquet file loses its partitioning
-    the moment it's re-read, so every later job pays the url shuffle again,
-    while a bucketed table read via the catalog satisfies ClusteredDistribution
-    on the bucket columns directly (groupBy(url, ...) aggregates with ZERO
-    exchanges, bucketed-bucketed equi-joins sort-merge without a shuffle on
-    either side — pinned by tests/test_plan_quality.py). This is the
-    Iceberg/Hive bucketing discipline expressed through Spark's managed-table
-    API; n_buckets should match the engine's N_BUCKETS so in-job and at-rest
-    partitioning agree."""
-    spark = df.sparkSession
-    if mode == "overwrite":
-        # a managed-table LOCATION can outlive its catalog entry (fresh
-        # session, old warehouse dir) — saveAsTable then refuses with
-        # LOCATION_ALREADY_EXISTS; drop both the entry and any stale dir
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = spark.conf.get("spark.sql.warehouse.dir", "")
-        loc = os.path.join(wh.removeprefix("file:"), table.split(".")[-1])
-        if wh and os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*sort_cols)
-        .saveAsTable(table)
-    )
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table THROUGH the catalog (spark.read.parquet on the
-    underlying files would silently drop the bucket spec)."""
-    return spark.table(table)
