@@ -2342,8 +2342,8 @@ def q60(spark, sf_dir):
     equal the batch aggregate bit-for-bit, which the DuckDB oracle checks.
     (Registered past the driver's 50-entry grading window — the streaming
     run takes tens of seconds — but the local validator value-checks it
-    every round; batch-parity of the other streaming operators is pinned by
-    tests/test_streaming.py.)"""
+    every round. It is the engine's only streaming query: the tier pipeline
+    runs as cron micro-batches, as the reference does.)"""
     import os
     import shutil
     import tempfile

@@ -7,12 +7,14 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever one is on sys.path
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from timeseries_harmonizer_spark.session import get_spark  # noqa: E402
@@ -90,6 +92,11 @@ def compare(name, a: pd.DataFrame, b: pd.DataFrame,
 
 
 def main(sf_dir="/root/testdata/sf0.01", only=None):
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    ran = [name for name in qs if not only or only in name]
+    if not ran:
+        print(f"no query name contains {only!r}")
+        return 2
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -102,11 +109,9 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
     spark = get_spark(app_name="validate", master=f"local[{cpus}]",
                       shuffle_partitions=cpus,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = {}
-    for name, fn in qs.items():
-        if only and only not in name:
-            continue
+    for name in ran:
+        fn = qs[name]
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
@@ -135,7 +140,7 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
         if problems:
             failures[name] = problems
     print("\n==== SUMMARY ====")
-    print(f"{len(qs) - len(failures)}/{len(qs)} clean")
+    print(f"{len(ran) - len(failures)}/{len(ran)} clean")
     for n, ps in failures.items():
         print(f"FAIL {n}: {ps[0]}")
     return 1 if failures else 0

@@ -1,5 +1,5 @@
-"""P1W/P1M calendar tiers: date_trunc windows in downsample / LAST rollup /
-retention sweep, pinned to the pandas calendar-resample oracle (the
+"""P1W/P1M calendar tiers: date_trunc windows in downsample (SUM, AVG and
+LAST) and the retention sweep, pinned to the pandas calendar-resample oracle (the
 reference's '1MS' transform_freq and isodate_floor,
 lib2/calculate_formulas.py:11-31)."""
 
@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from timeseries_harmonizer_spark.config import TIERS
 from timeseries_harmonizer_spark.operators.retention import sweep_tier
-from timeseries_harmonizer_spark.operators.rollup import downsample, rollup_native_last
+from timeseries_harmonizer_spark.operators.rollup import downsample
 
 
 @pytest.fixture(scope="module")
@@ -46,28 +46,6 @@ def test_downsample_to_p1w(spark, daily):
     exp = pdf.set_index("start")["value"].resample("W-MON", label="left", closed="left").sum()
     assert (pd.DatetimeIndex(got["start"]) == exp.index).all()
     np.testing.assert_allclose(got["value"].to_numpy(), exp.to_numpy())
-
-
-def test_rollup_last_p1m_locf(spark):
-    # sparse LAST series: Feb has no data -> LOCF from Jan, is_real False
-    pdf = pd.DataFrame(
-        {
-            "url": "u",
-            "warc_ts": pd.to_datetime(["2024-01-05", "2024-01-20", "2024-03-07"]),
-            "value": [1.0, 2.0, 3.0],
-        }
-    )
-    out = (
-        rollup_native_last(spark.createDataFrame(pdf), freq_seconds="P1M")
-        .orderBy("start")
-        .toPandas()
-    )
-    exp = (
-        pdf.set_index("warc_ts")["value"].resample("1MS").last().ffill()
-    )
-    assert (pd.DatetimeIndex(out["start"]) == exp.index).all()
-    np.testing.assert_allclose(out["value"].to_numpy(), exp.to_numpy())
-    assert out["is_real"].tolist() == [True, False, True]
 
 
 def test_sweep_1d_into_p1m(spark):

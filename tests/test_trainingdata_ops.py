@@ -15,7 +15,6 @@ from timeseries_harmonizer_spark.functions.textstats import (
 from timeseries_harmonizer_spark.operators import docdedup as D
 from timeseries_harmonizer_spark.operators.multimodal import (
     extract_features,
-    frame_sample,
     synthetic_media,
 )
 from timeseries_harmonizer_spark.operators.similarity import brute_force_topk, lsh_topk
@@ -59,17 +58,6 @@ def test_minhash_lsh_finds_planted_near_dups(spark, docs):
     found = set(zip(pairs["id_a"], pairs["id_b"]))
     for i in range(5):
         assert (i, i + 2000) in found, (i, sorted(found)[:10])
-
-
-def test_simhash_near_dups(spark, docs):
-    base = docs.where("doc_id < 3").toPandas()
-    mutated = base.copy()
-    mutated["doc_id"] += 3000
-    mutated["text"] = mutated["text"] + " qq"
-    all_docs = docs.unionByName(spark.createDataFrame(mutated))
-    pairs = D.simhash_near_dups(all_docs, max_hamming=6).toPandas()
-    found = set(zip(pairs["id_a"], pairs["id_b"]))
-    assert {(i, i + 3000) for i in range(3)} <= found
 
 
 def test_jaccard_exact_values(spark):
@@ -183,12 +171,6 @@ def test_multimodal_plumbing(spark):
     # payloads are ASCII hex pixels -> every channel mean is a code point
     for c in ("mean_r", "mean_g", "mean_b"):
         assert feats[c].between(ord("0"), ord("f")).all()
-    pdf = media.toPandas()
-    frames = frame_sample(media, every_bytes=64).toPandas()
-    expected = (pdf["payload"].map(len) // 64).clip(lower=1)
-    got = frames.groupby("media_id").size()
-    assert (got.to_numpy() == expected.to_numpy()).all()
-    assert frames["frame_bytes"].map(len).le(64).all()
 
 
 def test_real_ppm_decode_matches_payload(spark):
@@ -230,28 +212,6 @@ def test_codec_roundtrips():
     assert np.abs(s2 - s).max() < 1 / 32767
 
 
-def test_audio_features_via_wav(spark):
-    import numpy as np
-
-    from timeseries_harmonizer_spark.operators.multimodal import (
-        encode_wav,
-        extract_audio_features,
-    )
-
-    rng = np.random.default_rng(3)
-    clips = [rng.uniform(-0.5, 0.5, 400 + 100 * i) for i in range(4)]
-    rows = [(i, bytearray(encode_wav(c, 16000))) for i, c in enumerate(clips)]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = (
-        extract_audio_features(media).toPandas().set_index("media_id").sort_index()
-    )
-    assert (out["sample_rate"] == 16000).all()
-    assert list(out["n_samples"]) == [400, 500, 600, 700]
-    for i, c in enumerate(clips):
-        q = np.round(np.clip(c, -1, 1) * 32767) / 32767  # PCM16 quantization
-        assert abs(out.loc[i, "rms"] - np.sqrt(np.mean(q**2))) < 1e-9
-
-
 def test_decode_unknown_codec_raises(spark):
     from timeseries_harmonizer_spark.operators.multimodal import decode_image
 
@@ -271,7 +231,6 @@ def test_lsh_mega_bucket_capped(spark):
     )
     df = spark.createDataFrame(docs)
     assert D.minhash_near_dups(df, threshold=0.3, max_bucket=100).count() == 0
-    assert D.simhash_near_dups(df, max_bucket=100).count() == 0
     # uncapped control on a small subset still pairs everything up
     sub = spark.createDataFrame(docs.head(10))
     assert D.minhash_near_dups(sub, threshold=0.3, max_bucket=None).count() == 45

@@ -93,7 +93,7 @@ TIERS: dict[str, TierConfig] = {
     # The reference's raw 1s harmonization cannot express these at all
     # (pd.Timedelta("P1M") raises); they exist as downsample targets
     # (pandas "1MS" resample in calculations) and LAST rollups — same here:
-    # date_trunc windows in downsample / rollup_native_last / the formula
+    # date_trunc windows in downsample (sum/avg/last) and the formula
     # engine, fed by the 1d tier.
     "P1W": TierConfig(
         name="P1W",

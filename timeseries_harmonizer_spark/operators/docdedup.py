@@ -6,8 +6,8 @@ Design for 100 TB: every method is shuffle-bounded —
   raw text), map-side combined;
 - MinHash LSH: shingle -> K minhashes -> B bands -> bucket join; candidate
   pairs only ever materialize within a band bucket (no O(n^2));
-- SimHash: 64-bit signature, dedup by hamming-ball buckets (4 rotations of
-  16-bit blocks) so near signatures collide in at least one block;
+- SimHash: a 64-bit signature per document (one hash aggregation); near-dup
+  pairs come from MinHash LSH or cosine similarity;
 - n-gram Jaccard: exact verification on LSH/bucket candidates only.
 
 Everything is Column-expression arithmetic on xxhash64/md5 digests — no
@@ -291,54 +291,6 @@ def simhash(df: DataFrame, text: str = "text", id_col: str = "doc_id",
         term = F.when(F.col(f"b{b}") > 0, F.lit(bit_mask(b))).otherwise(F.lit(0).cast("long"))
         sig = term if sig is None else sig.bitwiseXOR(term)
     return per_doc.select(F.col(id_col), sig.alias("simhash"))
-
-
-def simhash_near_dups(
-    df: DataFrame, text: str = "text", id_col: str = "doc_id",
-    max_hamming: int = 3, max_bucket: int | None = 1000,
-) -> DataFrame:
-    """Near-dups by SimHash: bucket on each of the four 16-bit blocks (a pair
-    within hamming distance 3 must agree on at least one block), verify
-    hamming distance on candidates. Blocks shared by more than max_bucket
-    docs are dropped (degenerate-bucket quadratic guard, see
-    lsh_candidate_pairs)."""
-    sigs = simhash(df, text, id_col)
-    blocks = []
-    for blk in range(4):
-        blocks.append(
-            sigs.select(
-                F.col(id_col),
-                F.col("simhash"),
-                F.lit(blk).alias("blk"),
-                F.shiftrightunsigned("simhash", blk * 16).bitwiseAND(F.lit(0xFFFF)).alias("bucket"),
-            )
-        )
-    b = blocks[0]
-    for x in blocks[1:]:
-        b = b.unionByName(x)
-    if max_bucket is not None:
-        n = F.count("*").over(W.partitionBy("blk", "bucket"))
-        b = b.withColumn("__n", n).where(F.col("__n") <= max_bucket).drop("__n")
-    l, r = b.alias("l"), b.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.simhash").alias("sig_a"),
-            F.col("r.simhash").alias("sig_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cands.select("id_a", "id_b", hamming.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
-    )
 
 
 def connected_components_star(

@@ -277,49 +277,3 @@ def extract_features(
             )
 
     return media.mapInPandas(fn, out_schema)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """WAV payloads -> per-clip stats (rate, n_samples, rms, peak) via the
-    pure-numpy PCM16 decoder. Same mapInPandas shape as extract_features."""
-    out_schema = (
-        "media_id long, sample_rate int, n_samples long, rms double, peak double"
-    )
-
-    def fn(it):
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    columns=["media_id", "sample_rate", "n_samples", "rms", "peak"]
-                )
-                continue
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                s, rate = decode_wav(bytes(p))
-                rows.append(
-                    (
-                        mid,
-                        rate,
-                        s.shape[0],
-                        float(np.sqrt(np.mean(np.square(s)))) if s.size else 0.0,
-                        float(np.abs(s).max()) if s.size else 0.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "sample_rate", "n_samples", "rms", "peak"]
-            )
-
-    return media.mapInPandas(fn, out_schema)
-
-
-def frame_sample(media: DataFrame, every_bytes: int = 32) -> DataFrame:
-    """Frame-sampling analog: slice every Nth byte window of the payload as
-    a 'frame'. Pure Column ops (substring over binary)."""
-    n_frames = F.floor(F.length("payload") / every_bytes).cast("int")
-    idx = F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)))
-    frames = F.transform(
-        idx, lambda i: F.substring(F.col("payload"), i * every_bytes + 1, every_bytes)
-    )
-    return media.select(
-        "media_id", "kind", F.posexplode(frames).alias("frame_no", "frame_bytes")
-    )

@@ -13,8 +13,6 @@ LAST's per-window last knot explodes into the windows it carries forward
 the pandas 1s-grid replay (``series_kernels.harmonize``); floating-point
 addition order differs, so values agree up to float rounding.
 
-``rollup_native_last`` runs LAST over calendar (P1W/P1M) windows.
-
 Also here: R6 downsample (tier -> coarser tier), R7 upsample (ffill +
 sum-splitting), R8 dense reindex, and the north-star continuous aggregates
 (crawl count, text-length min/max/avg/sum, lang distribution) for web_pages.
@@ -40,10 +38,6 @@ def _window_col(ts_seconds_or_col, freq: int | str, is_ts: bool = False):
     s = int(freq)
     sec = F.unix_timestamp(ts_seconds_or_col) if is_ts else ts_seconds_or_col
     return F.floor(sec / s) * s
-
-
-def _calendar_interval(freq: str) -> str:
-    return "interval 1 month" if freq == "P1M" else "interval 1 week"
 
 
 # ---------------------------------------------------------------------------
@@ -280,50 +274,6 @@ def rollup_native_twa(
             F.timestamp_seconds(F.col("__w")).alias("start"),
             (F.floor(F.col("__integ") / F.col("__cov") * 1e6) / 1e6).alias(value),
         )
-    )
-
-
-def rollup_native_last(
-    df: DataFrame,
-    key: str = "url",
-    ts_col: str = "warc_ts",
-    value: str = "value",
-    freq_seconds: str = "P1M",
-    session_col: str | None = None,
-) -> DataFrame:
-    """R3 over calendar windows ('P1W'/'P1M': date_trunc labels, an
-    interval-stepped dense grid): tumbling last non-null value + LOCF
-    across the grid of each (series, session), with ``is_real`` as in
-    ``rollup_native``, which serves fixed-width tiers. Decades are only
-    hundreds of calendar windows, so the grid needs no chunking."""
-    if not isinstance(freq_seconds, str):
-        raise ValueError("fixed-width LAST rollups run in rollup_native")
-    sess = F.col(session_col) if session_col else F.lit(0)
-    win = _window_col(F.col(ts_col), freq_seconds, is_ts=True).alias("__w")
-    per_win = (
-        df.select(F.col(key).alias("__k"), sess.alias("__sess"), win, ts_col, value)
-        .groupBy("__k", "__sess", "__w")
-        .agg(
-            F.expr(f"max_by({value}, {ts_col}) FILTER (WHERE {value} IS NOT NULL)").alias("__last"),
-            F.count(F.col(ts_col)).alias("__nraw"),
-        )
-    )
-    spans = per_win.groupBy("__k", "__sess").agg(
-        F.min("__w").alias("__w0"), F.max("__w").alias("__w1")
-    )
-    grid = spans.select(
-        "__k", "__sess",
-        F.explode(
-            F.sequence("__w0", "__w1", F.expr(_calendar_interval(freq_seconds)))
-        ).alias("__w"),
-    )
-    joined = grid.join(per_win, ["__k", "__sess", "__w"], "left")
-    w = W.partitionBy("__k", "__sess").orderBy("__w").rowsBetween(W.unboundedPreceding, 0)
-    return joined.select(
-        F.col("__k").alias(key),
-        F.col("__w").alias("start"),
-        F.last("__last", ignorenulls=True).over(w).alias(value),
-        F.coalesce(F.col("__nraw") > 0, F.lit(False)).alias("is_real"),
     )
 
 

@@ -114,8 +114,8 @@ def run_tier(
             f"tier {tier.name!r} has calendar windows: raw 1s-gated rollup is "
             "undefined for variable-length windows (the reference's "
             "pd.Timedelta('P1M') raises too, lib2/__init__.py:33). Calendar "
-            "tiers are fed by the retention sweep (downsample from '1d'), "
-            "rollup_native_last, or the formula engine."
+            "tiers are fed by the retention sweep (downsample from '1d') "
+            "or the formula engine."
         )
     prepared = prepare(pages, registry, tier)
     pts = shape_points(rollup_points(prepared, tier), registry, tier)
